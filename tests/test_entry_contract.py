@@ -297,14 +297,12 @@ def test_bench_gate_suite_load_and_jumpy_ceiling_rules():
 def test_pin_list_is_self_maintaining():
     """The driver-window pin head derives from the committed
     CORRECTNESS artifacts: latest-round failures re-check first,
-    fix-carrying never-checked entries stay pinned until their first
-    driver row, sentinels always present — and every pin is a real
-    catalog name inside the 50-entry window."""
+    fix-carrying entries stay pinned until a CORRECTNESS row from a
+    later round than their fix, sentinels always present — and every pin is
+    a real catalog name inside the 50-entry window."""
     from westtopologies_spark.queries import (
-        _PIN_UNTIL_CHECKED,
         _PIN_UNTIL_RECHECKED,
         _SENTINELS,
-        _hard_signal_rounds,
         _latest_round_failures,
         _rounds_with_row,
         _top_priority,
@@ -319,14 +317,16 @@ def test_pin_list_is_self_maintaining():
     assert window[: len(pins)] == pins
     for s in _SENTINELS:
         assert s in pins
-    checked = _hard_signal_rounds()
-    for n in _PIN_UNTIL_CHECKED:
-        assert (n in pins) == (checked.get(n, 0) == 0)
     rounds = _rounds_with_row()
     for n, after in _PIN_UNTIL_RECHECKED.items():
+        assert n in names
         assert (n in pins) == (not any(r > after for r in rounds.get(n, ())))
     for n in _latest_round_failures():
         assert n in pins
+    # pins only ever come from the three sources above
+    assert set(pins) <= (
+        set(_latest_round_failures()) | set(_PIN_UNTIL_RECHECKED) | set(_SENTINELS)
+    )
 
 
 def test_rotation_is_staleness_first():

@@ -214,6 +214,19 @@ def test_ivf_centroids_deterministic(spark):
     assert a == b and len(a) >= 1
 
 
+def test_cov_gemm_partials_rejects_null_vector(spark):
+    """A null embedding row must fail loudly, not fold into X^T·X:
+    Arrow's ``ListArray.flatten()`` skips the child values behind a
+    null slot, so the dense-size guard sees 2 rows' worth of values
+    for 3 rows and raises."""
+    rows = [(0, [1.0, 2.0]), (1, None), (2, [3.0, 4.0])]
+    vecs = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>"
+    ).coalesce(1)
+    with pytest.raises(Exception, match="expected dense"):
+        similarity.cov_gemm_partials(vecs, dim=2).collect()
+
+
 def test_quality_score_monotone(spark):
     rows = [
         (0, "the cat is on the mat and it is a good cat"),

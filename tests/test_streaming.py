@@ -61,40 +61,6 @@ def test_w1_exact_stream_matches_batch(spark, staged_events):
     assert g == e
 
 
-def test_w1_exact_stream_tws_matches_batch(spark, staged_events):
-    # transformWithStateInPandas speaks protobuf to the JVM state
-    # server; without the package the stream crashes at pre-init
-    pytest.importorskip("google.protobuf.descriptor")
-    from westtopologies_spark.streaming.stateful import (
-        data_driven_window_rollup_stream_tws,
-    )
-
-    path, batch_df = staged_events
-    schema = "event_id long, ts timestamp, value double"
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        src = (
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
-        )
-        got = _run_stream(
-            spark, data_driven_window_rollup_stream_tws(src), "w1_tws_out"
-        )
-        expect = data_driven_windows(batch_df)
-        g = sorted(map(tuple, got.collect()))
-        e = sorted(map(tuple, expect.collect()))
-        assert len(g) > 3
-        assert g == e
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
 def test_w2_count_batches_stream(spark, staged_events):
     path, _ = staged_events
     schema = "event_id long, ts timestamp, value double"
@@ -523,23 +489,11 @@ def test_w1_exact_stream_keyed_matches_batch(spark, staged_keyed_events):
     assert got.select("root_id").distinct().count() > 1
 
 
-@pytest.mark.parametrize("variant", ["gaws", "tws"])
-def test_windowed_topk_stream_matches_batch(
-    spark, sf_dir, tmp_path_factory, variant
-):
-    """Streaming top-k (per-window count state + event-time timers)
+def test_windowed_topk_stream_matches_batch(spark, sf_dir, tmp_path_factory):
+    """Streaming top-k (per-window count state + event-time timeout)
     == batch rank for every window the watermark closed before end
-    of stream. ``gaws`` = applyInPandasWithState (runs everywhere);
-    ``tws`` = transformWithStateInPandas (needs protobuf+RocksDB)."""
-    if variant == "tws":
-        pytest.importorskip("google.protobuf.descriptor")
-        from westtopologies_spark.streaming.stateful import (
-            windowed_topk_stream,
-        )
-    else:
-        from westtopologies_spark.streaming.stateful import (
-            windowed_topk_stream_gaws as windowed_topk_stream,
-        )
+    of stream."""
+    from westtopologies_spark.streaming.stateful import windowed_topk_stream_gaws
 
     out = str(tmp_path_factory.mktemp("topk_stream"))
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 3000)
@@ -558,32 +512,13 @@ def test_windowed_topk_stream_matches_batch(
         )
         mtime = time.time() - 100 + i * 10
         os.utime(path, (mtime, mtime))
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    if variant == "tws":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    try:
-        schema = "event_id long, ts timestamp, event_type string"
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(out)
-        )
-        got = _run_stream(
-            spark,
-            windowed_topk_stream(src, interval_sec=3600, k=3),
-            "topk_stream_out",
-        ).collect()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
+    schema = "event_id long, ts timestamp, event_type string"
+    src = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(out)
+    got = _run_stream(
+        spark,
+        windowed_topk_stream_gaws(src, interval_sec=3600, k=3),
+        "topk_stream_out",
+    ).collect()
     assert len(got) > 0
     # batch reference: hourly counts + rank, restricted to the hours
     # the stream actually closed (the final watermark never passes
@@ -801,54 +736,6 @@ def test_ingest_dedup_stream_decomposes_batch_dedup(
     assert len(got) > 0
     # corpus index accumulated every arrival exactly once
     assert spark.read.parquet(corpus_dir).count() == docs.count()
-
-
-def test_lsh_candidate_stream_tws_matches_apips(spark, sf_dir, tmp_path_factory):
-    """transformWithStateInPandas LSH variant == the
-    applyInPandasWithState variant on the same replay."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from westtopologies_spark.streaming.stateful import (
-        lsh_candidate_stream,
-        lsh_candidate_stream_tws,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    out = str(tmp_path_factory.mktemp("lsh_tws"))
-    pdf = docs.toPandas().sort_values("doc_id")
-    n = len(pdf)
-    for i in range(3):
-        chunk = pdf.iloc[i * n // 3 : (i + 1) * n // 3]
-        p = os.path.join(out, f"part-{i}.parquet")
-        chunk.to_parquet(p, index=False)
-        mtime = time.time() - 100 + i * 10
-        os.utime(p, (mtime, mtime))
-
-    def run(fn, name, extra_conf=False):
-        src = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(out)
-        )
-        return {
-            (r.band, r.bucket, r.doc_prior, r.doc_new)
-            for r in _run_stream(spark, fn(src), name).collect()
-        }
-
-    base = run(lsh_candidate_stream, "lsh_apips_ref")
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        tws = run(lsh_candidate_stream_tws, "lsh_tws_out")
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    assert tws == base
-    assert len(base) > 0
 
 
 def test_lateness_profile_predicts_watermark_drops(spark, tmp_path_factory):

@@ -356,22 +356,6 @@ def predict_locations_gibbs(
     )
 
 
-def seeded_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    """M3 — probability-threshold filter (`Math.random() > p`),
-    reference HTMLMapFilterer.java:33-71 — as a seeded Bernoulli
-    sample (reproducible, partition-parallel)."""
-    return df.sample(fraction=fraction, seed=seed)
-
-
-def deterministic_sample(df: DataFrame, id_col: str, keep_percent: int) -> DataFrame:
-    """M3 (oracle-checkable variant) — hash-based deterministic
-    sampling: keep rows whose md5(id) low byte falls under the
-    threshold. Engine-independent (md5 is md5 everywhere), unlike
-    seeded PRNG sampling."""
-    bucket = F.conv(F.substring(F.md5(F.col(id_col).cast("string").cast("binary")), 1, 2), 16, 10).cast("int")
-    return df.filter(bucket < (256 * keep_percent) // 100)
-
-
 # ---------------------------------------------------------------------------
 # M1 fixed-point variant (oracle-checkable hard signal; VERDICT r3 #2)
 # ---------------------------------------------------------------------------

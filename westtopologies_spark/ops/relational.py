@@ -88,27 +88,9 @@ def clean_username(col: Column) -> Column:
     return F.regexp_replace(col, r"\s", "")
 
 
-def collapse_whitespace(col: Column) -> Column:
-    """P14 (part) — collapse repeated whitespace runs to one space.
-
-    Reference: locationTopicModelTopology/.../train/LocationTopicModelTrainer.java:193-207.
-    """
-    return F.regexp_replace(col, r"\s\s+", " ")
-
-
 # ---------------------------------------------------------------------------
 # Explode / flatten (§2.3)
 # ---------------------------------------------------------------------------
-
-
-def explode_mentions(df: DataFrame) -> DataFrame:
-    """E1 — one interaction row per `entities.user_mentions` element.
-
-    Reference: roleAnalysisTopology/.../bolts/InteractionGraphBolt.java:144-155.
-    Missing/empty arrays drop the row (plain explode, not _outer),
-    matching the reference's for-loop over the list.
-    """
-    return df.withColumn("mention", F.explode(F.col("entities.user_mentions")))
 
 
 def explode_loc_uris(df: DataFrame) -> DataFrame:
@@ -173,19 +155,6 @@ def dummy_parents(edges: DataFrame, id_col: str = "tweet_id", parent_col: str = 
     return referenced.join(observed, id_col, "left_anti")
 
 
-def broadcast_lookup(
-    df: DataFrame,
-    side: DataFrame,
-    on: list[str] | str,
-    how: str = "left",
-) -> DataFrame:
-    """J2/J3/J4 — generic broadcast equi-join against a small static
-    side table (the reference's in-memory hash-map lookups, e.g.
-    LocationCrawlerBolt.java:116-129, TweetIndexBolt.java:180-185).
-    """
-    return df.join(F.broadcast(side), on, how)
-
-
 def first_match(df: DataFrame, keys: list[str], order: list[Column]) -> DataFrame:
     """J2 ("take first") — keep the first matching row per key.
 
@@ -199,29 +168,6 @@ def first_match(df: DataFrame, keys: list[str], order: list[Column]) -> DataFram
 # ---------------------------------------------------------------------------
 # Aggregations (§2.5)
 # ---------------------------------------------------------------------------
-
-
-def grouped_interactions(edges: DataFrame) -> DataFrame:
-    """A1 — per (author, action): arrival-ordered list of
-    (target, created_at) pairs.
-
-    Reference: InteractionGraphBolt.java:96-166. ``sort_array`` makes
-    the list order deterministic (the reference relies on arrival
-    order; we sort by (created_at, dst) which is total on fixtures).
-    """
-    return edges.groupBy("src_user", "action").agg(
-        F.sort_array(F.collect_list(F.struct("created_at", "dst_user"))).alias("interactions")
-    )
-
-
-def distinct_partners(edges: DataFrame) -> DataFrame:
-    """A2 — per (author, action): sorted distinct set of targets.
-
-    Reference: InteractionGraphBolt.java:179-196 (flat graph view).
-    """
-    return edges.groupBy("src_user", "action").agg(
-        F.sort_array(F.collect_set("dst_user")).alias("partners")
-    )
 
 
 def tercile_boundaries(df: DataFrame, value_col: str, group_cols: list[str] | None = None) -> DataFrame:
@@ -254,50 +200,6 @@ def tercile_boundaries(df: DataFrame, value_col: str, group_cols: list[str] | No
     if group_cols:
         return df.groupBy(*group_cols).agg(*agg)
     return df.groupBy().agg(*agg)
-
-
-def level_of(value: Column, low_mid: Column, mid_high: Column) -> Column:
-    """A4 — map a value to low/med/high with `<=` boundaries.
-
-    Reference: Boundaries#getLevel (`<=` -> low/med, else high).
-    """
-    return (
-        F.when(value <= low_mid, F.lit("low"))
-        .when(value <= mid_high, F.lit("med"))
-        .otherwise(F.lit("high"))
-    )
-
-
-def naive_bayes_score(
-    props: DataFrame,
-    group_col: str,
-    rel_col: str = "rel",
-    irrel_col: str = "irrel",
-    total_rel: float = 1.0,
-    total_irrel: float = 1.0,
-    pos_apriori: float = 0.5,
-) -> DataFrame:
-    """A5 — naive-Bayes candidate scoring, product -> log-sum so it is
-    a distributed aggregation instead of a driver-side loop.
-
-    posOdds = prod((rel_p + 1) / (totalRel + 2)) * posApriori,
-    negOdds analogously; accept iff posOdds > negOdds.
-
-    Reference: LocationCrawlerBolt.java:155-181.
-    """
-    pos_log = F.log((F.col(rel_col) + 1.0) / (total_rel + 2.0))
-    neg_log = F.log((F.col(irrel_col) + 1.0) / (total_irrel + 2.0))
-    import math
-
-    return (
-        props.groupBy(group_col)
-        .agg(
-            (F.sum(pos_log) + math.log(pos_apriori)).alias("pos_log_odds"),
-            (F.sum(neg_log) + math.log(1.0 - pos_apriori)).alias("neg_log_odds"),
-            F.count(F.lit(1)).alias("n_props"),
-        )
-        .withColumn("accept", F.col("pos_log_odds") > F.col("neg_log_odds"))
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -20,8 +20,6 @@ from pyspark.sql import functions as F
 # fixture territory (seeded library behaviour, SURVEY.md §7.3).
 TOKEN_PATTERN = r"[#@]?[A-Za-zÀ-ÖØ-öø-ÿ][A-Za-zÀ-ÖØ-öø-ÿ'']*"
 
-URL_PATTERN = r"https?://\S+"
-
 # X3 — English stopword subset (the reference embeds full en/de lists
 # in the jar; disabled in the Storm path, TweetIndexBolt.java:174).
 EN_STOPWORDS = (
@@ -35,10 +33,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "es": ("el", "la", "los", "las", "es", "y", "que"),
     "fr": ("le", "la", "les", "et", "est", "que"),
 }
-
-
-def strip_urls(col: Column) -> Column:
-    return F.regexp_replace(col, URL_PATTERN, " ")
 
 
 def tokenize(df: DataFrame, text_col: str = "text", out_col: str = "tokens") -> DataFrame:
@@ -74,9 +68,8 @@ def stem_rule_based(token: Column) -> Column:
     SQL expressions: plural/-ing/-ed with a min-stem-length guard.
 
     The reference uses the Snowball (tartarus) stemmer [bytecode:
-    ckling.text.Text]; :func:`stem_snowball_udf` matches that family
-    when the library is present. This rule-based variant exists so the
-    stemming stage has an exact cross-engine oracle.
+    ckling.text.Text]; this rule-based variant exists so the stemming
+    stage has an exact cross-engine oracle.
     """
     t = F.lower(token)
     t = F.when(t.rlike("^.{4,}ies$"), F.regexp_replace(t, "ies$", "y")).otherwise(t)
@@ -87,25 +80,6 @@ def stem_rule_based(token: Column) -> Column:
     t = F.when(t.rlike("^.{5,}ing$"), F.regexp_replace(t, "ing$", "")).otherwise(t)
     t = F.when(t.rlike("^.{5,}ed$"), F.regexp_replace(t, "ed$", "")).otherwise(t)
     return t
-
-
-def stem_snowball_udf():
-    """X4 — Snowball stemmer as an Arrow-batched pandas UDF; None if
-    the library is unavailable in this environment."""
-    try:
-        import snowballstemmer  # noqa: F401
-    except ImportError:
-        return None
-    import pandas as pd
-
-    @F.pandas_udf("string")
-    def _stem(s: pd.Series) -> pd.Series:
-        import snowballstemmer
-
-        stemmer = snowballstemmer.stemmer("english")
-        return s.map(lambda x: stemmer.stemWord(x) if x is not None else None)
-
-    return _stem
 
 
 def language_scores(df: DataFrame, text_col: str = "text") -> DataFrame:

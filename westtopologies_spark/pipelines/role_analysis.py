@@ -85,16 +85,6 @@ def role_analysis_batch(
     return roles.select("window_start", "user_id", "post_count", "role")
 
 
-def role_output_lines(roles: DataFrame) -> DataFrame:
-    """S6 parity: `id \\t username \\t role` lines
-    (RoleAnalysisBolt.java:113-114; username joined upstream)."""
-    return roles.select(
-        F.concat_ws(
-            "\t", F.col("user_id").cast("string"), F.coalesce("author_screen_name", F.lit("")), "role"
-        ).alias("value")
-    )
-
-
 def windowed_edge_sets_stream(
     tweets: DataFrame, window: str = "10 minutes", watermark: str = "10 minutes"
 ) -> DataFrame:

@@ -5,15 +5,14 @@ a sink and submit the streaming query.
 The reference's runners assemble spout -> bolts -> sink and submit a
 Thrift topology (roleAnalysisTopology/.../TopologyRunner.java:165-207);
 here the pipeline function declares a Catalyst plan and
-``writeStream`` submits it. Two execution shapes:
-
-- ``run_append``: fully incremental plans (stateless transforms,
-  single watermarked aggregation) run natively in append mode;
-- ``run_foreach_batch``: pipelines whose kernel is not incrementally
-  computable (multi-step aggregation chains, ``applyInPandas``
-  scoring) run the BATCH pipeline per micro-batch — the reference's
-  per-message bolt semantics, at micro-batch granularity, with
-  exactly-once sinks via checkpointing.
+``writeStream`` submits it. Fully incremental plans (stateless
+transforms, a single watermarked aggregation) need no runner: they
+call ``writeStream`` in append mode directly.
+``run_foreach_batch`` serves pipelines whose kernel is not
+incrementally computable (multi-step aggregation chains,
+``applyInPandas`` scoring): it runs the BATCH pipeline per
+micro-batch — the reference's per-message bolt semantics, at
+micro-batch granularity, with exactly-once sinks via checkpointing.
 """
 
 from __future__ import annotations
@@ -21,28 +20,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-
-
-def run_append(
-    stream_df: DataFrame,
-    checkpoint: str,
-    sink_format: str = "memory",
-    query_name: str = "pipeline",
-    trigger_available_now: bool = True,
-    **sink_options: str,
-):
-    """Submit an incremental plan with an append-mode sink."""
-    w = (
-        stream_df.writeStream.format(sink_format)
-        .outputMode("append")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-    )
-    for k, v in sink_options.items():
-        w = w.option(k, v)
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
 
 
 def run_foreach_batch(

@@ -14,7 +14,10 @@ The demonstration data is the driver's TPC-H-ish tables plus
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -41,7 +44,13 @@ class QuerySpec:
 _CATALOG: list[QuerySpec] = []
 
 
-def _register(name: str, oracle, doc: str = ""):
+def _register(
+    name: str,
+    oracle,
+    doc: str = "",
+    scaled: dict[str, int] | None = None,
+    portable: bool = False,
+):
     """``oracle`` may be the SQL string, None (rows-only), or a
     ZERO-ARG CALLABLE returning the SQL.  The callable form exists for
     oracle builders that import helpers from a SIBLING submodule:
@@ -49,7 +58,14 @@ def _register(name: str, oracle, doc: str = ""):
     it is still partially initialized whenever a caller imports that
     sibling first (circular import — the queries_ext3-first failure
     class).  Lazy oracles are resolved once, at first catalog
-    access (_apply_hardening), when every submodule has finished."""
+    access (_resolve_lazy_oracles), when every submodule has finished.
+
+    ``scaled`` declares the entry's hash-exact output contract (see
+    below): each named double column leaves BOTH engines as the
+    scaled BIGINT ``<col>_x1eK``; ``portable`` selects the
+    sign-symmetric floor half-up instead of builtin ``round()``.  The
+    decorated function itself stays unwrapped; only the catalog entry
+    carries the contract."""
 
     def deco(fn):
         # a silently-duplicated name would run one query twice in the
@@ -57,7 +73,16 @@ def _register(name: str, oracle, doc: str = ""):
         # round-3 nearly re-registered ag_bootstrap_ci)
         if any(s.name == name for s in _CATALOG):
             raise ValueError(f"duplicate catalog registration: {name}")
-        _CATALOG.append(QuerySpec(name, fn, oracle, doc))
+        if scaled:
+            spec = QuerySpec(
+                name,
+                _scaled_spark(fn, scaled, portable),
+                _scaled_oracle(oracle, scaled, portable),
+                doc + " Hash-exact output (scaled BIGINT, r3 sweep).",
+            )
+        else:
+            spec = QuerySpec(name, fn, oracle, doc)
+        _CATALOG.append(spec)
         return fn
 
     return deco
@@ -121,6 +146,72 @@ def _scaled_int_sql(inner: str, keep: list[str], scaled: dict[str, int]) -> str:
         for c, k in scaled.items()
     ]
     return f"SELECT {', '.join(items)} FROM (\n{inner}\n)"
+
+
+def _scaled_int_sql_exclude(inner: str, scaled: dict[str, int]) -> str:
+    """Wrap oracle SQL: keep every column except the scaled ones
+    (DuckDB ``* EXCLUDE``), append the scaled-BIGINT projections."""
+    excl = ", ".join(f'"{c}"' for c in scaled)
+    items = [f"* EXCLUDE ({excl})"] + [
+        f'CAST(round("{c}" * {10 ** k}) AS BIGINT) AS {c}_x1e{k}'
+        for c, k in scaled.items()
+    ]
+    return f"SELECT {', '.join(items)} FROM (\n{inner}\n)"
+
+
+def _scaled_int_sql_exclude_portable(inner: str, scaled: dict[str, int]) -> str:
+    """Portable-half-up twin of :func:`_scaled_int_sql_exclude`."""
+    excl = ", ".join(f'"{c}"' for c in scaled)
+    items = [f"* EXCLUDE ({excl})"] + [
+        _portable_scale_sql(c, k) for c, k in scaled.items()
+    ]
+    return f"SELECT {', '.join(items)} FROM (\n{inner}\n)"
+
+
+# ---------------------------------------------------------------------------
+# Hash-exact hardening sweep (round 3): every catalog query that had
+# never earned a driver correctness row and still emitted a COMPUTED
+# double (rounded ratio/score, decimal-cast sum, shared-expression
+# division) declares ``scaled=`` at its registration, so both engines
+# emit the scaled-BIGINT projection — whichever round the
+# self-rotating window reaches it, the driver's hasher sees only
+# exact integers.  The scale K per column preserves the precision the
+# query already rounded to (K=2 for DECIMAL(18,2)-cent sums, 4/6
+# matching round(...,4/6), 6 for previously-unrounded
+# shared-expression doubles).  Raw passthrough doubles (untouched
+# column values) keep their two rounds of passing precedent and are
+# NOT wrapped.  Queries with an existing driver PASS are left
+# untouched — passing precedent beats churn.
+#
+# ``portable=True`` (ADVICE r3 low, r5 tie sweep): the former K=9
+# wraps scaled raw doubles by 1e9 with builtin round() — any 1-ulp
+# upstream divergence lands the product within ulp of a .5 boundary
+# ~1000x more often than at K=6, and round() itself is
+# boundary-unportable (rule 4).  Entries that emit a RAW bit-identical
+# double (single int/int or decimal-exact division, or the shared EWMA
+# left-fold — inner builtin round(x, K>0) removed from BOTH dialects)
+# ship it through the portable sign-symmetric floor half-up, which
+# agrees across engines even at exact representable ties.
+# ---------------------------------------------------------------------------
+
+
+def _scaled_spark(fn, scaled: dict[str, int], portable: bool):
+    to_int = _as_scaled_int_portable if portable else _as_scaled_int
+
+    def wrapped(spark, sf_dir):
+        return to_int(fn(spark, sf_dir), scaled)
+
+    return wrapped
+
+
+def _scaled_oracle(oracle, scaled: dict[str, int], portable: bool):
+    to_sql = _scaled_int_sql_exclude_portable if portable else _scaled_int_sql_exclude
+    if oracle is None:
+        return None
+    if callable(oracle):
+        # lazy oracle: the wrap runs when _resolve_lazy_oracles calls it
+        return lambda: to_sql(oracle(), scaled)
+    return to_sql(oracle, scaled)
 
 
 # ---------------------------------------------------------------------------
@@ -1446,188 +1537,23 @@ from . import queries_ext6  # noqa: E402, F401
 from . import queries_ext7  # noqa: E402, F401
 
 
-# ---------------------------------------------------------------------------
-# Hash-exact hardening sweep (round 3): every catalog query that has
-# never earned a driver correctness row and still emits a COMPUTED
-# double (rounded ratio/score, decimal-cast sum, shared-expression
-# division) is wrapped IN PLACE with the scaled-BIGINT projection on
-# both engines — so whichever round the self-rotating window reaches
-# it, the driver's hasher sees only exact integers.  The scale K per
-# column preserves the precision the query already rounded to (K=2
-# for DECIMAL(18,2)-cent sums, 4/6 matching round(...,4/6), 9 for
-# previously-unrounded shared-expression doubles).  Raw passthrough
-# doubles (untouched column values) keep their two rounds of passing
-# precedent and are NOT wrapped.  Queries with an existing driver
-# PASS are left untouched — passing precedent beats churn.
-# ---------------------------------------------------------------------------
+# Lazy oracles are resolved at first catalog access, not at module
+# scope: if a caller imports a submodule like queries_ext FIRST, Python
+# re-enters this module before that submodule finished registering its
+# entries (circular import), and an eager pass would see a partial
+# _CATALOG.
+_RESOLVED = False
 
 
-def _scaled_int_sql_exclude(inner: str, scaled: dict[str, int]) -> str:
-    """Wrap oracle SQL: keep every column except the scaled ones
-    (DuckDB ``* EXCLUDE``), append the scaled-BIGINT projections."""
-    excl = ", ".join(f'"{c}"' for c in scaled)
-    items = [f"* EXCLUDE ({excl})"] + [
-        f'CAST(round("{c}" * {10 ** k}) AS BIGINT) AS {c}_x1e{k}'
-        for c, k in scaled.items()
-    ]
-    return f"SELECT {', '.join(items)} FROM (\n{inner}\n)"
-
-
-def _scaled_int_sql_exclude_portable(inner: str, scaled: dict[str, int]) -> str:
-    """Portable-half-up twin of :func:`_scaled_int_sql_exclude`."""
-    excl = ", ".join(f'"{c}"' for c in scaled)
-    items = [f"* EXCLUDE ({excl})"] + [
-        _portable_scale_sql(c, k) for c, k in scaled.items()
-    ]
-    return f"SELECT {', '.join(items)} FROM (\n{inner}\n)"
-
-
-def _harden(name: str, scaled: dict[str, int], portable: bool = False) -> None:
-    for i, spec in enumerate(_CATALOG):
-        if spec.name != name:
-            continue
-        fn = spec.spark
-        to_int = _as_scaled_int_portable if portable else _as_scaled_int
-        to_sql = (
-            _scaled_int_sql_exclude_portable
-            if portable
-            else _scaled_int_sql_exclude
-        )
-
-        def wrapped(spark, sf_dir, _fn=fn, _s=scaled, _w=to_int):
-            return _w(_fn(spark, sf_dir), _s)
-
-        oracle = to_sql(spec.oracle, scaled) if spec.oracle is not None else None
-        _CATALOG[i] = QuerySpec(
-            name,
-            wrapped,
-            oracle,
-            spec.doc + " Hash-exact output (scaled BIGINT, r3 sweep).",
-        )
-        return
-    raise KeyError(f"_harden: unknown catalog entry {name}")
-
-
-_HARDEN_SCALES: dict[str, dict[str, int]] = {
-    # raw passthrough, but never driver-checked and window-eligible —
-    # zero-doubt beats the passthrough precedent for window entrants
-    "dv_latest_per_key": {"value": 2},
-    "dv_cdc_apply": {"last_value": 2},
-    "ts_session_window": {"sum_value": 2},
-    "gs_rollup": {"sum_qty": 2, "sum_price": 2},
-    "ag_profile": {"min_num": 4, "max_num": 4},
-    "wn_range_frame": {"sum_prev_hour": 2},
-    "ag_histogram": {"bin_min": 2, "bin_max": 2},
-    "ag_pivot": {
-        "event_type_click": 2,
-        "event_type_error": 2,
-        "event_type_purchase": 2,
-        "event_type_signup": 2,
-        "event_type_view": 2,
-    },
-    "ag_quantile_bins": {"bin_lo": 2, "bin_hi": 2},
-    "sq_local_supplier_volume": {"revenue": 4},
-    "j10_salted_join": {"revenue": 2},
-    "gs_cube": {"sum_price": 2},
-    # o_totalprice: raw 2-dp passthrough, but never driver-checked and
-    # window-eligible — zero-doubt cents wrap (r4 verdict #1)
-    "sq_large_orders": {"total_qty": 2, "o_totalprice": 2},
-    # r5 catalog-wide double scan: the LAST two never-checked entries
-    # with raw-double outputs — all passthroughs (lower-rule quantile
-    # = min; OHLC = first/last/min/max), zero-doubt cents wraps
-    "ag_qq_points": {"q_click": 2, "q_purchase": 2},
-    "ts_ohlc_hourly": {
-        "open_v": 2,
-        "high_v": 2,
-        "low_v": 2,
-        "close_v": 2,
-    },
-    "gr_neighbor_jaccard": {"jaccard": 6},
-    "gr_pagerank": {"pagerank": 6},
-    "sq_returned_revenue": {"revenue": 4},
-    "sq_volume_shipping": {"revenue": 4},
-    "sq_price_bands": {"revenue": 4},
-    "gs_grouping_sets": {"sum_price": 2},
-    "ts_sliding_rollup": {"sum_value": 2},
-
-    "ag_auc": {"auc": 6},
-    "ag_pr_curve": {"precision": 6, "recall": 6},
-    "ag_ks_test": {"ks_d": 6},
-    "ag_calibration": {"mean_pred": 6, "actual_rate": 6},
-    "ts_autocorr": {"lag1_corr": 6},
-    "sq_small_quantity_revenue": {"avg_yearly": 2},
-    "ag_chisq_cells": {"expected": 4, "contrib": 6},
-}
-
-# ADVICE r3 (low): the former K=9 wraps scaled raw doubles by 1e9 with
-# builtin round() — any 1-ulp upstream divergence lands the product
-# within ulp of a .5 boundary ~1000x more often than at K=6, and
-# round() itself is boundary-unportable (rule 4).  These two use the
-# portable sign-symmetric floor half-up at K=6 instead.
-_HARDEN_PORTABLE: dict[str, dict[str, int]] = {
-    "j12_geo_cell_join": {"dist": 6},
-    "ag_linfit": {"slope": 6, "intercept": 6},
-    # pct_rank/cume are bit-identical exact-integer-ratio doubles —
-    # portable half-up is the correct wrap (builtin round's BigDecimal
-    # vs double-scaling paths can disagree ON THE SAME double at a
-    # boundary, rule 4); o_totalprice is the zero-doubt cents wrap of
-    # a raw 2-dp passthrough (r4 verdict #1)
-    "wn_ntile_cume": {"pct_rank": 6, "cume": 6, "o_totalprice": 2},
-    # r5 tie sweep (rule 16 + the ts_monthly_trend fuzzer find): every
-    # entry below now emits a RAW bit-identical double (single int/int
-    # or decimal-exact division, or the shared EWMA left-fold — inner
-    # builtin round(x, K>0) removed from BOTH dialects) and ships it
-    # through the portable half-up, which agrees across engines even
-    # at exact representable ties.
-    "ag_trimmed_mean": {"trimmed_mean": 4},
-    "ag_gini": {"gini": 6},
-    "ag_winsorized_mean": {"winsorized_mean": 4},
-    "ud_geomean": {"geomean": 4},
-    "ag_corr": {"covar": 4, "corr": 4},
-    "sq_promo_revenue": {"promo_pct": 6},
-    "sq_market_share": {"mkt_share": 6},
-    "ts_seasonality": {"avg_value": 6},
-    "gr_assortativity": {"assortativity": 6},
-    "tp_quality_gate": {"quality_score": 4},
-    "ts_cohort": {"retention": 4},
-    "tp_contamination": {"rate": 4},
-    "ts_ewma": {"ewma": 6},
-    "tp_class_weights": {"weight": 6},
-    "tp_priority_sample": {"priority": 4},
-    "ts_transitions": {"p_transition": 6},
-    "ag_contribution": {"revenue": 2, "pct_of_total": 4},
-    "tx_quality_score": {
-        "avg_token_len": 4,
-        "stopword_ratio": 4,
-        "alpha_ratio": 4,
-        "quality_score": 4,
-    },
-}
-
-# Applied LAZILY (first catalog access), not at module scope: if a
-# caller imports a submodule like queries_ext FIRST, Python re-enters
-# this module before that submodule finished registering its entries
-# (circular import), and an eager sweep would see a partial _CATALOG.
-_HARDENED = False
-
-
-def _apply_hardening() -> None:
-    global _HARDENED
-    if not _HARDENED:
-        # resolve LAZY oracles first (callables registered to dodge
-        # sibling-submodule circular imports — see _register): by the
-        # time the catalog is read, every submodule has finished
-        # initializing, so the builders can import freely
+def _resolve_lazy_oracles() -> None:
+    global _RESOLVED
+    if not _RESOLVED:
         for _i, _spec in enumerate(_CATALOG):
             if callable(_spec.oracle):
                 _CATALOG[_i] = QuerySpec(
                     _spec.name, _spec.spark, _spec.oracle(), _spec.doc
                 )
-        for _n, _s in _HARDEN_SCALES.items():
-            _harden(_n, _s)
-        for _n, _s in _HARDEN_PORTABLE.items():
-            _harden(_n, _s, portable=True)
-        _HARDENED = True
+        _RESOLVED = True
 
 
 # ---------------------------------------------------------------------------
@@ -1641,99 +1567,33 @@ def _apply_hardening() -> None:
 # §"hard-signal rotation".
 # ---------------------------------------------------------------------------
 
-# Pinned core of the driver's 50-query hard-signal window.  VERDICT r2
-# #1: with 50 pinned names the window could never rotate — 121 of 171
-# queries had no driver row after two rounds.  The pin list is now ~16:
-# the two r2 hash-fails (re-check after the hash-exact rework) plus a
-# handful of SURVEY §2 sentinels spanning the reference pipelines
-# (window/json/roles/text/geo/model); the remaining ~34 slots flow to
-# never-checked queries via the self-rotating sort below.
-# Round-4 pin set (VERDICT r3 #1/#2): the six r3 hash-failers whose
-# oracles were CAST-fixed this round re-check first; the five latent
-# HUGEINT entries the same sweep fixed are pinned too (they were
-# never-checked, so pinning them costs no rotation slot); the M1
-# slot now holds the oracle-able fixed-point variant instead of
-# burning on err:no_oracle. Multi-round-green sentinels are trimmed
-# to three so ~36 slots rotate to the 146-entry never-checked
-# backlog (VERDICT r3 #3).
-# Always-pinned SURVEY §2 sentinels (one per reference pipeline family).
+# Pinned core of the 50-query hard-signal window, kept small so the
+# rest of the window rotates (VERDICT r2 #1: with 50 pinned names the
+# window could never rotate — 121 of 171 queries had no CORRECTNESS
+# row after two rounds).  Always-pinned SURVEY §2 sentinels,
+# one per reference pipeline family:
 _SENTINELS = [
     "w1_window_rollup",  # streaming window family
     "a3_role_assignment",  # role cascade family
     "x2_tokenize",  # text family
 ]
 
-# Pin WHILE UNPROVEN: entries that carry a targeted fix or a brand-new
-# hard-signal contract stay pinned until the driver records their
-# first row, then release automatically (checked count > 0). The
-# round-4 members: the five latent HUGEINT fixes and the fixed-point
-# M1 variant.
-_PIN_UNTIL_CHECKED = [
-    "tx_heldout_nll",
-    "j8_bloom_semi_join",
-    "tp_length_buckets",
-    "tp_token_mixture",
-]
-
-# Pin UNTIL RE-CHECKED: entries that were already driver-green but
-# received a semantic fix afterwards (their old rows prove the OLD
-# contract, not the fix). name -> round the fix landed after; the pin
-# releases once a CORRECTNESS row from a LATER round exists.
-# r5 member: ag_iqr_outliers' exact-integer fence rework (green r4 on
-# the fixed testdata, but the double fence was fuzzer-flipped —
-# VERDICT r4 #2 requires a fresh driver row on the new contract).
-_PIN_UNTIL_RECHECKED: dict[str, int] = {
-    # r9 (ADVICE r8 medium: the oracle window must cover the round's
-    # behavioral rewrites, not just the staleness rotation): pin the
-    # most-restructured r8/r9 entries that have NO post-rewrite driver
-    # row.  The full touched set is larger (~25) but pinning it all
-    # would starve the r03-era stale backlog; these eight are the
-    # deepest rewrites — one per changed kernel, plus both halves of
-    # a kernel whose two entries diverge structurally.  All release
-    # automatically once CORRECTNESS_r09 lands.
-    "a3_role_features": 8,  # r9 closed-form root_id restructure
-    "tx_bpe_train": 8,  # r8 flat-string merge rep (last row r4)
-    "tx_bpe_apply": 8,  # r8 flat-string merge rep (last row r4)
-    "dd_ppjoin": 8,  # r8 prefix-filter restructure on array base
-    "tp_contamination": 8,  # r8 zip_with shingle fold (the 107x entry)
-    "dd_dup_spans": 8,  # r8 in-row span construction
-    "mm_cdc_dedup": 8,  # r8 split('') O(L) byte codes
-    "ann_ivfadc_topk": 8,  # r8 packed-key argmin+argmax compose (row r4)
-    # r7: graduated from rows-only (err:no_oracle every round) to the
-    # deterministic integer-histogram sketch with a real DuckDB
-    # replay oracle (VERDICT r6 #4) — needs its first hash row
-    "ag_approx_percentiles": 6,
-    # r7: in-plan degree cap (top-32 by the md5 order, VERDICT r6 #5)
-    # — the r6-green row proved the UNCAPPED contract; the capped
-    # rewrite needs its own driver hash row
-    "gr_neighbor_jaccard": 6,
-    # r6: lambda-recompute fix staged mn/mx/sc outside the transform
-    # (VERDICT r5 #2a) — arithmetic identical, plan reshaped; needs a
-    # post-fix driver hash row
-    "emb_quantize": 5,
-    "ag_iqr_outliers": 4,
-    # r5: libm/JVM exp removed from the hashed softmax path
-    # (deterministic 2^k * Horner exp, ADVICE r4 medium)
-    "m1_region_topk": 4,
-    # r5: rows-only exemption retired — deterministic fixed-hash HLL
-    # now has a real oracle (verdict r4 #6); needs its first hash row
-    "ag_hll_distinct": 4,
-    # r5 tie sweep: quality features now raw-double + portable wrap
-    # (shared kernel with the window entry tp_quality_gate) — the old
-    # r1-green row hashed the rounded-double contract
-    "tx_quality_score": 4,
-}
+# Pin UNTIL RE-CHECKED: entries that carry a targeted fix or a
+# brand-new hard-signal contract (an old row proves the OLD contract,
+# not the fix).  name -> round the fix landed after; the pin releases
+# once a CORRECTNESS row from a LATER round exists, so a never-checked
+# entry pinned at 0 releases on its first row.  Empty while every
+# fix has its post-fix row; a released pin is deleted, not kept.
+_PIN_UNTIL_RECHECKED: dict[str, int] = {}
 
 
-def _rounds_with_row() -> dict[str, set]:
-    """name -> set of round numbers with a committed CORRECTNESS row."""
-    import glob
-    import json
-    import os
-    import re
-
+def _correctness_rounds() -> dict[int, dict]:
+    """round -> {name: row} for every CORRECTNESS_r{N}.json committed
+    into the repo root — the one reader of those artifacts.
+    Tolerant of absence (round 1, fresh clones); an unreadable or
+    non-object file counts as a round with no rows."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out: dict[str, set] = {}
+    out: dict[int, dict] = {}
     for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         if not m:
@@ -1742,10 +1602,17 @@ def _rounds_with_row() -> dict[str, set]:
             with open(path) as f:
                 rows = json.load(f)
         except (OSError, ValueError):
-            continue
-        if isinstance(rows, dict):
-            for name in rows:
-                out.setdefault(name, set()).add(int(m.group(1)))
+            rows = {}
+        out[int(m.group(1))] = rows if isinstance(rows, dict) else {}
+    return out
+
+
+def _rounds_with_row() -> dict[str, set]:
+    """name -> set of round numbers with a committed CORRECTNESS row."""
+    out: dict[str, set] = {}
+    for n, rows in _correctness_rounds().items():
+        for name in rows:
+            out.setdefault(name, set()).add(n)
     return out
 
 
@@ -1754,29 +1621,12 @@ def _latest_round_failures() -> list[str]:
     any explicit false match flag — the automatic re-check set.
     err-only rows (e.g. rows-only entries recorded as no_oracle) are
     not failures to re-check; by-design gaps would pin forever."""
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    newest, newest_n = None, -1
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if m and int(m.group(1)) > newest_n:
-            newest, newest_n = path, int(m.group(1))
-    if newest is None:
-        return []
-    try:
-        with open(newest) as f:
-            rows = json.load(f)
-    except (OSError, ValueError):
-        return []
-    if not isinstance(rows, dict):
+    rounds = _correctness_rounds()
+    if not rounds:
         return []
     return [
         name
-        for name, r in rows.items()
+        for name, r in rounds[max(rounds)].items()
         if isinstance(r, dict)
         and (
             any(
@@ -1796,16 +1646,14 @@ def _top_priority() -> list[str]:
     """The pinned head of the driver window, SELF-MAINTAINING
     (round-4 rework — the hand-edited list needed per-round pruning):
     1. every entry the newest driver round FAILED (re-check the fix),
-    2. fix-carrying entries that have never received a driver row,
+    2. fix-carrying entries with no CORRECTNESS row since their fix,
     3. the three SURVEY sentinels.
     Once a fix is driver-green its pin disappears on the next round's
     ordering without an edit, freeing the slot for the never-checked
     backlog."""
-    checked = _hard_signal_rounds()
     rounds = _rounds_with_row()
     pins = list(dict.fromkeys(
         _latest_round_failures()
-        + [n for n in _PIN_UNTIL_CHECKED if checked.get(n, 0) == 0]
         + [
             n
             for n, after in _PIN_UNTIL_RECHECKED.items()
@@ -1829,25 +1677,8 @@ _HEADLINE_FAMILIES = ("dd_", "tx_", "dv_", "emb_", "mm_", "ann_", "gr_")
 
 
 def _hard_signal_rounds() -> dict[str, int]:
-    """How many driver rounds have hard-checked each query, read from
-    the CORRECTNESS_r*.json artifacts the driver commits into the
-    repo root.  Tolerant of absence (round 1, fresh clones)."""
-    import glob
-    import json
-    import os
-
-    counts: dict[str, int] = {}
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if isinstance(rows, dict):
-            for name in rows:
-                counts[name] = counts.get(name, 0) + 1
-    return counts
+    """How many committed rounds have hard-checked each query."""
+    return {name: len(rs) for name, rs in _rounds_with_row().items()}
 
 
 def _ordered() -> list[QuerySpec]:
@@ -1871,7 +1702,7 @@ def _ordered() -> list[QuerySpec]:
     — exactly the ones whose current output wraps have never been
     driver-hashed.  Oldest-last-check-first pulls all of them ahead
     of anything already re-proven on the post-rewrite contracts."""
-    _apply_hardening()
+    _resolve_lazy_oracles()
     pins = _top_priority()
     by_name = {spec.name: spec for spec in _CATALOG}
     top = [by_name[n] for n in pins if n in by_name]
@@ -1906,22 +1737,12 @@ def window_double_offenders(spark, sf_dir: str = "/root/testdata/sf0.001") -> li
     the ts_sessionize failure class the moment the driver hashes it.
 
     Returns ['name.col:type', ...]; empty == clean."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    passed = set()
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if isinstance(rows, dict):
-            for name, r in rows.items():
-                if isinstance(r, dict) and r.get("hash_match"):
-                    passed.add(name)
+    passed = {
+        name
+        for rows in _correctness_rounds().values()
+        for name, r in rows.items()
+        if isinstance(r, dict) and r.get("hash_match")
+    }
     offenders = []
     for spec in _ordered()[:50]:
         if spec.oracle is None or spec.name in passed:

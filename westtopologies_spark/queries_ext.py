@@ -135,6 +135,7 @@ def _session_window_sql() -> str:
     "equivalent gaps-and-islands fixpoint, cross-checking two "
     "independent physical plans of the same semantics. "
     "Scale extension.",
+    scaled={"sum_value": 2},
 )
 def ts_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.sessionize_native(_t(spark, sf_dir, "events"))
@@ -386,6 +387,7 @@ def tp_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "explicit grouping-level column: Catalyst expands grouping sets "
     "into one pass with partial aggregation (map-side combine) — no "
     "per-level rescan. Aggregation extension (absent in reference).",
+    scaled={"sum_qty": 2, "sum_price": 2},
 )
 def gs_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -476,6 +478,9 @@ def _trimmed_sql() -> str:
     "same O(1)-memory rank plan as ag_percentiles with integer trim "
     "bounds (no interpolation), then a partial-agg'd mean. "
     "Aggregate-statistics extension.",
+    # r5 tie sweep (rule 16): raw bit-identical double, portable half-up
+    scaled={"trimmed_mean": 4},
+    portable=True,
 )
 def ag_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scale import aggstats as A
@@ -513,6 +518,9 @@ def _quality_gate_sql() -> str:
     "deterministic hash threshold (reproducible, repartition-stable, "
     "oracle-replayable) — the middle ground between hard quality "
     "filtering and keeping everything. Training-data prep extension.",
+    # r5 tie sweep (rule 16): raw bit-identical double, portable half-up
+    scaled={"quality_score": 4},
+    portable=True,
 )
 def tp_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TP.quality_gate(_t(spark, sf_dir, "documents"))
@@ -635,6 +643,9 @@ def _cohort_sql() -> str:
     "cohorts x weekly activity, with retention rates. Integer-divided "
     "week buckets, four key-partitioned aggregations, no global "
     "windows. Temporal-analytics extension.",
+    # r5 tie sweep (rule 16): raw bit-identical double, portable half-up
+    scaled={"retention": 4},
+    portable=True,
 )
 def ts_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.cohort_retention(_t(spark, sf_dir, "events"))
@@ -694,6 +705,9 @@ FROM a
     "hi*2^20+lo BIGINTs for a portable double reconstruction) feed "
     "ONE shared tree — the builtin covar_samp/corr accumulate "
     "differently per engine (rules 5/16/17); portable wrap.",
+    # r5 tie sweep (rule 16): raw bit-identical double, portable half-up
+    scaled={"covar": 4, "corr": 4},
+    portable=True,
 )
 def ag_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scale.aggstats import grouped_corr
@@ -979,6 +993,9 @@ def _contamination_sql() -> str:
     "side collapses to a distinct-shingle set probed by the small "
     "eval delta (same shape as incremental dedup). Training-data "
     "prep extension.",
+    # r5 tie sweep (rule 16): raw bit-identical double, portable half-up
+    scaled={"rate": 4},
+    portable=True,
 )
 def tp_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scale import versioning as V
@@ -1169,6 +1186,7 @@ def _profile_sql() -> str:
     "aggregates in a single agg, 1-row result unpivoted with stack "
     "(no driver loop). Swap NDV to the HLL sketch at corpus scale. "
     "Profiling extension.",
+    scaled={"min_num": 4, "max_num": 4},
 )
 def ag_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scale import aggstats as A
@@ -1408,6 +1426,13 @@ def ts_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Window extension. pct_rank/cume are single exact-integer-ratio "
     "divisions (bit-identical cross-engine), shipped through the "
     "portable half-up K=6 wrap, never builtin round (rule 4).",
+    # pct_rank/cume are bit-identical exact-integer-ratio doubles —
+    # portable half-up is the correct wrap (builtin round's BigDecimal
+    # vs double-scaling paths can disagree ON THE SAME double at a
+    # boundary, rule 4); o_totalprice is the zero-doubt cents wrap of
+    # a raw 2-dp passthrough (r4 verdict #1)
+    scaled={"pct_rank": 6, "cume": 6, "o_totalprice": 2},
+    portable=True,
 )
 def wn_ntile_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1446,6 +1471,7 @@ def wn_ntile_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
     "frame would not be). One key-partitioned sort, no self-join: "
     "the O(n^2)-candidate alternative (self range-join) is exactly "
     "what this plan avoids at scale. Window extension.",
+    scaled={"sum_prev_hour": 2},
 )
 def wn_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1527,6 +1553,9 @@ def _geomean_sql() -> str:
     "and the oracle share the exactly-rounded det-ln/det-exp chains "
     "with an exact integer-quantized log sum — no libm anywhere, so "
     "CPython, Spark and DuckDB agree bitwise.",
+    # r5 tie sweep (rule 16): raw bit-identical double, portable half-up
+    scaled={"geomean": 4},
+    portable=True,
 )
 def ud_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .ops.udafs import geometric_mean
@@ -1609,6 +1638,7 @@ def ag_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Equi-width value histogram (25k-wide bins of order value): "
     "map-side binning + partial aggregation, shuffle carries one row "
     "per (task, bin). Aggregate-statistics extension.",
+    scaled={"bin_min": 2, "bin_max": 2},
 )
 def ag_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scale import aggstats as A
@@ -1886,6 +1916,9 @@ def _ewma_sql() -> str:
     "aggregate == DuckDB list_reduce executes the identical operation "
     "order, bit-identical before output rounding. Time-series "
     "extension.",
+    # r5 tie sweep (rule 16): raw bit-identical double, portable half-up
+    scaled={"ewma": 6},
+    portable=True,
 )
 def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.ewma(_t(spark, sf_dir, "events"))
@@ -2054,6 +2087,9 @@ def tp_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Inverse-frequency class weights (balanced convention "
     "n/(n_classes*count)): one count aggregate + broadcast 1-row "
     "total. Training-prep extension.",
+    # r5 tie sweep (rule 16): raw bit-identical double, portable half-up
+    scaled={"weight": 6},
+    portable=True,
 )
 def tp_class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TP.class_weights(_t(spark, sf_dir, "embeddings"))
@@ -2123,6 +2159,13 @@ _PIVOT_TYPES = ("click", "error", "purchase", "signup", "view")
     "distinct-scan job, stable schema): per user-bucket summed value "
     "per event type, compiled to one CASE-WHEN sum per column with "
     "map-side combine. Aggregate-statistics extension.",
+    scaled={
+        "event_type_click": 2,
+        "event_type_error": 2,
+        "event_type_purchase": 2,
+        "event_type_signup": 2,
+        "event_type_view": 2,
+    },
 )
 def ag_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scale import aggstats as A
@@ -2293,6 +2336,9 @@ def _priority_sample_sql() -> str:
     "(priority = w/u, top-n): deterministic hash u makes the draw "
     "reproducible and repartition-stable; top-n is a TakeOrdered, "
     "never a global sort. Training-prep extension.",
+    # r5 tie sweep (rule 16): raw bit-identical double, portable half-up
+    scaled={"priority": 4},
+    portable=True,
 )
 def tp_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TP.priority_sample(_t(spark, sf_dir, "documents"))
@@ -2317,6 +2363,7 @@ def tp_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "priority class): one keyed ntile window with a deterministic "
     "tiebreak + a partial-agg'd rollup — the feature-discretization "
     "primitive. Aggregate-statistics extension.",
+    scaled={"bin_lo": 2, "bin_hi": 2},
 )
 def ag_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scale import aggstats as A
@@ -2424,6 +2471,9 @@ def tx_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Upsert compaction: latest row per key (one keyed row_number "
     "window, deterministic tiebreak) — the fold a CDC stream applies "
     "to produce current state before a MERGE. Versioning extension.",
+    # raw passthrough, but never driver-checked and window-eligible —
+    # zero-doubt beats the passthrough precedent for window entrants
+    scaled={"value": 2},
 )
 def dv_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scale import versioning as V
@@ -2654,6 +2704,7 @@ def sq_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dimensions broadcast; only the orders-lineitem join shuffles; "
     "region filter prunes through nation before any fact scan. "
     "Relational extension.",
+    scaled={"revenue": 4},
 )
 def sq_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
@@ -2886,6 +2937,9 @@ def ts_monthly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sequences (lead window keyed by user, pair counts, per-source "
     "normalization from a re-aggregation — no second corpus scan): "
     "the session path-analysis primitive. Temporal extension.",
+    # r5 tie sweep (rule 16): raw bit-identical double, portable half-up
+    scaled={"p_transition": 6},
+    portable=True,
 )
 def ts_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -2923,6 +2977,9 @@ def ts_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     "share of total; the percent window runs on the pre-aggregated "
     "5-row frame, the heavy lifting is one partial-agg'd groupBy. "
     "Aggregate-statistics extension.",
+    # r5 tie sweep (rule 16): raw bit-identical double, portable half-up
+    scaled={"revenue": 2, "pct_of_total": 4},
+    portable=True,
 )
 def ag_contribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = (
@@ -2962,6 +3019,7 @@ def ag_contribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "side replicated 8x, join key (key, salt)) and must produce the "
     "plain-join oracle result exactly — salting is routing, never "
     "semantics. Skew-mitigation extension.",
+    scaled={"revenue": 2},
 )
 def j10_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scale.skew import salted_join
@@ -3218,6 +3276,9 @@ def mm_tile_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "denominator-10 integer caps (cents*10 BIGINTs) and an exact "
     "clamped integer sum; the mean is one shared double division, "
     "portable-wrapped (rule 16).",
+    # r5 tie sweep (rule 16): raw bit-identical double, portable half-up
+    scaled={"winsorized_mean": 4},
+    portable=True,
 )
 def ag_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scale import aggstats as A
@@ -3310,6 +3371,7 @@ def ts_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     "column: all 4 grouping sets in ONE Catalyst Expand pass with "
     "map-side partial aggregation — no per-level rescan. "
     "Aggregation extension.",
+    scaled={"sum_price": 2},
 )
 def gs_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -3403,6 +3465,9 @@ def sq_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "aggregate drives a semi-style join back onto the fact table; "
     "the big-order key set is tiny post-filter so AQE broadcasts it. "
     "Relational extension.",
+    # o_totalprice: raw 2-dp passthrough, but never driver-checked and
+    # window-eligible — zero-doubt cents wrap (r4 verdict #1)
+    scaled={"total_qty": 2, "o_totalprice": 2},
 )
 def sq_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -3804,6 +3869,9 @@ def tx_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(sum(i*cents), sum(cents) — the old double sums were partition-"
     "order-dependent) feed ONE shared tree; portable half-up wrap "
     "(rule 16).",
+    # r5 tie sweep (rule 16): raw bit-identical double, portable half-up
+    scaled={"gini": 6},
+    portable=True,
 )
 def ag_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")

@@ -52,6 +52,7 @@ _REV_DEC = "CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,4))"
     "returnflag predicate prunes lineitem, and the 25-row nation dim "
     "broadcasts; top-20 is a TakeOrdered with a DECIMAL-exact sort "
     "key. Relational extension.",
+    scaled={"revenue": 4},
 )
 def sq_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
@@ -103,6 +104,7 @@ VOLUME_NATIONS = ("NATION_1", "NATION_2")
     "pair predicate runs after them — Catalyst keeps the big "
     "lineitem-orders join as the only shuffle pair. Relational "
     "extension.",
+    scaled={"revenue": 4},
 )
 def sq_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _t(spark, sf_dir, "supplier")
@@ -160,6 +162,9 @@ def sq_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     "DECIMAL so the final ratio is order-independent; the month "
     "predicate pushes into the lineitem scan and the part dim "
     "broadcasts. Relational extension.",
+    # r5 tie sweep (rule 16): raw bit-identical double, portable half-up
+    scaled={"promo_pct": 6},
+    portable=True,
 )
 def sq_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").filter(
@@ -210,6 +215,7 @@ def sq_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "brand/size disjunction onto the part scan and the quantity "
     "disjunction onto lineitem before the broadcast join, so neither "
     "side scans full. Relational extension.",
+    scaled={"revenue": 4},
 )
 def sq_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -268,6 +274,7 @@ def sq_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(nation, priority) cell): one Expand pass, 3 output grids, "
     "map-side partial agg; nation broadcasts into the orders join. "
     "Aggregation extension.",
+    scaled={"sum_price": 2},
 )
 def gs_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -791,6 +798,9 @@ MARKET_REGION = "ASIA"
     "both sums as exact DECIMAL per year. The deepest join tree in "
     "the catalog; Catalyst orders it without hints. Relational "
     "extension.",
+    # r5 tie sweep (rule 16): raw bit-identical double, portable half-up
+    scaled={"mkt_share": 6},
+    portable=True,
 )
 def sq_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "STANDARD")
@@ -859,6 +869,9 @@ def sq_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fingerprint behind capacity planning and anomaly baselines; "
     "one partial-agg shuffle to a 7x24-bounded result. Temporal "
     "extension.",
+    # r5 tie sweep (rule 16): raw bit-identical double, portable half-up
+    scaled={"avg_value": 6},
+    portable=True,
 )
 def ts_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -1020,6 +1033,9 @@ def mm_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "base: the log IS the table, the incremental variant is "
     "dv_incremental_rollup's partial-merge shape). Versioning "
     "extension.",
+    # raw passthrough, but never driver-checked and window-eligible —
+    # zero-doubt beats the passthrough precedent for window entrants
+    scaled={"last_value": 2},
 )
 def dv_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -1085,6 +1101,7 @@ SLIDE_STEP_S = 600  # ... sliding every 10 minutes
     "oracle replays the expansion with an explicit 3-row range join. "
     "The reference's tumbling W1 cannot express overlap at all. "
     "Temporal extension.",
+    scaled={"sum_value": 2},
 )
 def ts_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -1154,6 +1171,10 @@ GEO_RADIUS = 2.0  # degrees; also the grid cell size
     "Extends the reference's coordinate pipeline "
     "(LocationCrawlerBolt) with the proximity-join shape it lacked. "
     "Join extension.",
+    # ADVICE r3 (low): formerly a K=9 builtin-round() wrap; portable
+    # half-up at K=6 instead
+    scaled={"dist": 6},
+    portable=True,
 )
 def j12_geo_cell_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = GEO_RADIUS
@@ -1264,6 +1285,10 @@ LINFIT_EPOCH0 = 820_454_400  # 1996-01-01; x in MINUTES keeps x^2 sums < 2^53
     "engines); the closed-form normal equations then run as one "
     "shared double expression — emitted un-rounded, bit-identical "
     "cross-engine. Aggregate-statistics extension.",
+    # ADVICE r3 (low): formerly a K=9 builtin-round() wrap; portable
+    # half-up at K=6 instead
+    scaled={"slope": 6, "intercept": 6},
+    portable=True,
 )
 def ag_linfit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -1346,6 +1371,7 @@ def ag_linfit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "from the per-score rollup, and every rank-sum term stays an "
     "exact integer, so u2/np/nn are bit-identical to the row-level "
     "plan the oracle states. Aggregate-statistics extension.",
+    scaled={"auc": 6},
 )
 def ag_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
@@ -1422,6 +1448,7 @@ def ag_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rows, not documents — the eval-metric companion to ag_auc, "
     "same exact-integer discipline, ratios un-rounded. "
     "Aggregate-statistics extension.",
+    scaled={"precision": 6, "recall": 6},
 )
 def ag_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
@@ -1502,6 +1529,7 @@ KS_TYPE_B = "purchase"
     "|ca*n2 - cb*n1| — max over |distinct values| pre-aggregated "
     "rows, never raw events — and one shared double division emits "
     "D un-rounded. Aggregate-statistics extension.",
+    scaled={"ks_d": 6},
 )
 def ag_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL measurements are not points of a value CDF — and an
@@ -1782,6 +1810,7 @@ CALIB_BINS = 10
     "over the score DOMAIN, never the corpus; per-bin sums fold the "
     "tie counts exactly, bit-identical to the row-level plan the "
     "oracle states. Aggregate-statistics extension.",
+    scaled={"mean_pred": 6, "actual_rate": 6},
 )
 def ag_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
@@ -1870,6 +1899,7 @@ def ag_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sufficient statistics fold as exact BIGINT and one shared "
     "double expression (IEEE sqrt included) emits r un-rounded. "
     "Temporal extension.",
+    scaled={"lag1_corr": 6},
 )
 def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -1933,6 +1963,7 @@ Q17_BRAND = "Brand#5"
     "quantity sum / count, one shared double expression), so the "
     "strict < cut is engine-identical even when 0.2*avg lands "
     "exactly on an integer quantity. Relational extension.",
+    scaled={"avg_yearly": 2},
 )
 def sq_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -1994,6 +2025,7 @@ def sq_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "of the summed statistic keeps every value free of cross-row "
     "double summation — the reader sums 35 exact-by-construction "
     "numbers. Aggregate-statistics extension.",
+    scaled={"expected": 4, "contrib": 6},
 )
 def ag_chisq_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")

@@ -522,6 +522,10 @@ def dv_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "output is hash-exact by construction. Two windows + one "
     "map-combinable rollup over the same hour key — a single "
     "shuffle. Temporal extension.",
+    # r5 catalog-wide double scan: one of the last two never-checked
+    # entries with raw-double outputs — all passthroughs (OHLC =
+    # first/last/min/max), zero-doubt cents wrap
+    scaled={"open_v": 2, "high_v": 2, "low_v": 2, "close_v": 2},
 )
 def ts_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")

@@ -205,6 +205,10 @@ def _qq_side_sql(etype: str, alias: str) -> str:
     "plus a broadcast per-partition prefix-count table (the "
     "sq_skyline recipe) — so no single task ever sorts the full "
     "side. Aggregate-statistics extension.",
+    # r5 catalog-wide double scan: one of the last two never-checked
+    # entries with raw-double outputs — all passthroughs (lower-rule
+    # quantile = min), zero-doubt cents wrap
+    scaled={"q_click": 2, "q_purchase": 2},
 )
 def ag_qq_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")

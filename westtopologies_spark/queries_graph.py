@@ -133,6 +133,7 @@ _GUARD_DEGREE = 32
     "scale-bound-free in ops.graph.neighbor_jaccard for bounded "
     "inputs and is parity-tested in tests/test_graph.py. "
     "Graph-analytics extension.",
+    scaled={"jaccard": 6},
 )
 def gr_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return G.neighbor_jaccard(
@@ -232,6 +233,7 @@ def _pagerank_sql() -> str:
     "float convergence). Fully declarative — no driver-side loop or "
     "collect; each round is one shuffle on dst. Graph-analytics "
     "extension.",
+    scaled={"pagerank": 6},
 )
 def gr_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     tweets = _event_edges(spark, sf_dir)
@@ -475,6 +477,9 @@ def gr_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "degrees/products — symmetry makes the x and y moments "
     "identical) with ONE double division at the end; two keyed "
     "joins + one global fold, no windows. Graph-analytics extension.",
+    # r5 tie sweep (rule 16): raw bit-identical double, portable half-up
+    scaled={"assortativity": 6},
+    portable=True,
 )
 def gr_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _ckpt_small(G.user_edges(_event_edges(spark, sf_dir)))

@@ -548,6 +548,14 @@ def _quality_sql() -> str:
     _quality_sql(),
     doc="Text quality scoring: token/length/stopword/alpha features "
     "+ composite score, all JVM-side expressions. Scale extension.",
+    # r5 tie sweep (rule 16): raw bit-identical double, portable half-up
+    scaled={
+        "avg_token_len": 4,
+        "stopword_ratio": 4,
+        "alpha_ratio": 4,
+        "quality_score": 4,
+    },
+    portable=True,
 )
 def tx_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.quality_scores(_t(spark, sf_dir, "documents"))

@@ -918,10 +918,10 @@ def embedding_neardup_pairs_pruned(
     ``cos(max(0, theta_ij - ri - rj))`` is below the threshold (minus
     rounding/FP margin) provably contains NO qualifying pair and is
     skipped WITHOUT scoring.  Surviving pairs are scored with the same
-    dense GEMM kernel.  Unlike the SemDeDup variant
-    (:func:`embedding_neardup_pairs_clustered`, which declares
-    within-cluster-only semantics), the result set here is IDENTICAL
-    to exact all-pairs — the DuckDB oracle replays the plain exact
+    dense GEMM kernel.  Unlike the SemDeDup recipe (which declares
+    within-cluster-only semantics, see
+    :func:`semantic_dedup_components`), the result set here is
+    IDENTICAL to exact all-pairs — the DuckDB oracle replays the plain exact
     SQL, untouched.
 
     Scale: pruning work is k^2 rows (tiny); scoring work is
@@ -1076,62 +1076,6 @@ def embedding_neardup_pairs_pruned(
     )
 
 
-def embedding_neardup_pairs_clustered(
-    emb: DataFrame,
-    threshold: float = C.NEARDUP_COSINE_THRESHOLD,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = C.KMEANS_K,
-    iters: int = C.KMEANS_ITERS,
-) -> DataFrame:
-    """(id_a, id_b, cosine): SemDeDup-recipe near-dup pairs — vectors
-    are first assigned to deterministic spherical-k-means clusters
-    (:func:`..similarity.kmeans_assignments`), then compared EXACTLY
-    (dense GEMM) only within their cluster.
-
-    This is the scale-safe default candidate generation (VERDICT r1
-    #3): candidate work is sum(|cluster|^2) instead of the all-pairs
-    n^2 of :func:`embedding_neardup_pairs` — with ``k`` scaled so
-    clusters hold a few thousand vectors, a 100x corpus growth grows
-    the per-cluster GEMMs linearly, not quadratically.  Cross-cluster
-    pairs are NOT compared: that recall<1 trade-off is the declared
-    semantics (exactly SemDeDup's: Abbas et al. 2023 dedupe within
-    k-means clusters only) and the DuckDB oracle replays the identical
-    clustering trace, so the result is still bit-deterministic.
-    ``embedding_neardup_pairs`` remains the exact small-data kernel /
-    oracle path.
-    """
-    import pandas as pd
-
-    from .similarity import kmeans_assignments
-
-    assign = kmeans_assignments(
-        emb, k=k, iters=iters, vec_col=vec_col, id_col=id_col
-    )
-    rows = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).join(
-        assign.select(F.col("vec_id").alias("id"), "cluster_id"), "id"
-    )
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        ids = pdf["id"].to_numpy()
-        A = np.asarray([np.asarray(x) for x in pdf["v"]])
-        A = A / np.linalg.norm(A, axis=1, keepdims=True)
-        S = np.round(A @ A.T, 4)
-        ii, jj = np.nonzero((S >= threshold) & (ids[:, None] < ids[None, :]))
-        return pd.DataFrame(
-            {"id_a": ids[ii], "id_b": ids[jj], "cosine": S[ii, jj]}
-        ).astype({"id_a": "int64", "id_b": "int64", "cosine": "float64"})
-
-    return rows.groupBy("cluster_id").applyInPandas(
-        score, "id_a long, id_b long, cosine double"
-    )
-
-
 def semantic_dedup_components(
     emb: DataFrame,
     threshold: float = C.NEARDUP_COSINE_THRESHOLD,
@@ -1142,8 +1086,10 @@ def semantic_dedup_components(
 ) -> DataFrame:
     """(vec_id, component_id): SemDeDup keep-list labels in ONE pass.
 
-    Because :func:`embedding_neardup_pairs_clustered` only ever emits
-    same-cluster pairs, the near-dup graph decomposes exactly into
+    SemDeDup compares vectors only within their deterministic
+    spherical-k-means cluster (Abbas et al. 2023; cross-cluster pairs
+    are NOT compared — the declared recall<1 trade-off), so the
+    near-dup graph decomposes exactly into
     per-cluster subgraphs — so the connected components are computed
     INSIDE the same per-cluster kernel (numpy GEMM for the pairs, then
     a union-find over them), with no iterative label-propagation rounds

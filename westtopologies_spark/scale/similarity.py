@@ -964,27 +964,6 @@ def cov_upper(
     )
 
 
-def covariance_long(emb: DataFrame, dim: int = C.EMBEDDING_DIM) -> DataFrame:
-    """Full symmetric sample-covariance matrix in long form
-    (dim_i, dim_j, cov), cov rounded 6dp — the same arithmetic as the
-    ``emb_covariance`` catalog entry (upper triangle computed once,
-    then mirrored), so a PCA oracle can replay it from the identical
-    SQL CTE.  r9: the upper triangle comes from per-task NumPy GEMM
-    partials (:func:`cov_gemm_partials`) instead of the per-vector
-    product explode."""
-    # r8: the mirror union references ut twice — without truncation
-    # the full corpus-side partial aggregation sits in the plan twice
-    # (runtime exchange reuse recovers the exchange, but the compile
-    # and the post-exchange work are still doubled).  ut is at most
-    # dim*(dim+1)/2 rows at ANY corpus scale: checkpoint it.
-    ut = cov_upper(emb, dim).coalesce(1).localCheckpoint()
-    return ut.union(
-        ut.filter(F.col("dim_i") < F.col("dim_j")).select(
-            F.col("dim_j").alias("dim_i"), F.col("dim_i").alias("dim_j"), "cov"
-        )
-    )
-
-
 def pca_power_projection(
     emb: DataFrame,
     dim: int = C.EMBEDDING_DIM,
@@ -993,8 +972,8 @@ def pca_power_projection(
     """Top principal component by fixed-iteration power method, plus
     the per-vector projection onto it.
 
-    The D x D rounded covariance (``covariance_long``) is iterated
-    ``iters`` times: w = round(C v, 9) -> v = round(w / ||w||, 9),
+    The D x D rounded covariance (:func:`cov_upper`, mirrored) is
+    iterated ``iters`` times: w = round(C v, 9) -> v = round(w / ||w||, 9),
     starting from the exact-constant uniform vector 1/sqrt(D).  The
     component's sign is canonicalized on dim 1 (flip if negative), the
     top eigenvalue estimate is the final ||w||, and each vector's

@@ -532,84 +532,6 @@ def data_driven_window_rollup_stream(
     )
 
 
-def data_driven_window_rollup_stream_tws(
-    events: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    seq_col: str = "event_id",
-    interval_sec: int = 600,
-) -> DataFrame:
-    """W1 exact semantics on ``transformWithStateInPandas`` — the
-    current-generation arbitrary-stateful API (SURVEY.md §2.11).
-    Output is identical to :func:`data_driven_window_rollup_stream`;
-    this variant is the forward path: typed value state, and (unused
-    here, available when needed) timers and state TTL for eviction at
-    scale. Requires the RocksDB state-store provider
-    (``spark.sql.streaming.stateStore.providerClass``) and the
-    ``protobuf`` package (TWS's Python state-server protocol) — the
-    parity test skips where protobuf is absent;
-    :func:`data_driven_window_rollup_stream` is the
-    dependency-free equivalent.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class W1Processor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._buf = handle.getValueState(
-                "buf", "start_us long, n long, sum_cents long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._buf.exists():
-                start_us, n, total_c = self._buf.get()
-            else:
-                start_us, n, total_c = None, 0, 0
-            # concatenate the batch's chunks, then one global sort by
-            # arrival seq — chunk boundaries are arbitrary
-            pdf = pd.concat(list(rows)).sort_values(seq_col)
-            out = []
-            for ts, val in zip(pdf[ts_col], pdf[value_col]):
-                ts_us = int(ts.value // 1000)
-                if start_us is None:
-                    start_us = ts_us
-                    n = 0
-                    total_c = 0
-                n += 1
-                total_c += _cents(val)
-                if ts_us >= start_us + interval_sec * 1_000_000:
-                    out.append(
-                        (
-                            pd.Timestamp(start_us * 1000),
-                            pd.Timestamp(ts_us * 1000),
-                            n,
-                            total_c / 100.0,
-                        )
-                    )
-                    start_us = None
-            if start_us is None:
-                self._buf.clear()
-            else:
-                self._buf.update((start_us, n, total_c))
-            yield pd.DataFrame(
-                out, columns=["window_start", "window_end", "n_events", "sum_value"]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select(ts_col, value_col, seq_col)
-        .withColumn("_g", F.lit(0))
-        .groupBy("_g")
-        .transformWithStateInPandas(
-            W1Processor(), W1_OUT_SCHEMA, "append", "None"
-        )
-    )
-
-
 def count_batches_stream(
     df: DataFrame,
     seq_col: str = "event_id",
@@ -748,101 +670,6 @@ TOPK_OUT_SCHEMA = (
 )
 
 
-def windowed_topk_stream(
-    events: DataFrame,
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    interval_sec: int = 3600,
-    k: int = 3,
-    watermark: str = "0 seconds",
-) -> DataFrame:
-    """Streaming per-window top-k heavy hitters via
-    ``transformWithStateInPandas`` with MAP STATE and EVENT-TIME
-    TIMERS — the batch ``ts_topk_hourly`` shape, expressed as a
-    stream.  Plain streaming aggregation cannot produce this in
-    append mode: ranking is not incremental (a late row can reorder
-    the whole window), so the rank must run exactly once, when the
-    watermark proves the window complete.
-
-    Mechanics: rows are keyed by their tumbling window start; each
-    key holds a MapState of type -> count (state size = |distinct
-    types| per open window, NOT rows); the first row of a window
-    registers an event-time timer at window_end, and
-    ``handleExpiredTimer`` fires once the watermark passes it —
-    emitting the top-k (count desc, type asc) and clearing the map.
-    State is bounded by (windows in flight) x (distinct types);
-    the watermark is the eviction proof.  Keys shard across
-    executors, so thousands of concurrent windows scale out.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TopKProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._counts = handle.getMapState(
-                "counts", "event_type string", "cnt long"
-            )
-            self._armed = handle.getValueState("armed", "armed boolean")
-
-        def handleInputRows(self, key, rows, timerValues):
-            if not self._armed.exists():
-                # window_end timer: key[0] is the window start (epoch
-                # micros inside pandas Timestamps; timers take ms)
-                end_ms = int(pd.Timestamp(key[0]).value // 1_000_000) + (
-                    interval_sec * 1000
-                )
-                self._handle.registerTimer(end_ms)
-                self._armed.update((True,))
-            for pdf in rows:
-                for t, c in pdf.groupby(type_col).size().items():
-                    prev = (
-                        self._counts.getValue((t,))[0]
-                        if self._counts.containsKey((t,))
-                        else 0
-                    )
-                    self._counts.updateValue((t,), (prev + int(c),))
-            return iter(())
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            items = [
-                (kk[0], vv[0]) for kk, vv in self._counts.iterator()
-            ]
-            items.sort(key=lambda x: (-x[1], x[0]))
-            out = [
-                (pd.Timestamp(key[0]), t, c, i + 1)
-                for i, (t, c) in enumerate(items[:k])
-            ]
-            self._counts.clear()
-            self._armed.clear()
-            yield pd.DataFrame(
-                out,
-                columns=["window_start", "event_type", "n_events", "rnk"],
-            )
-
-        def close(self) -> None:
-            pass
-
-    win_start = F.timestamp_seconds(
-        (F.floor(F.unix_timestamp(F.col(ts_col)) / interval_sec) * interval_sec)
-        .cast("long")
-    )
-    # watermark rides the DERIVED window_start column (the grouping
-    # key), so it survives the projection into the stateful operator;
-    # a timer at window_end then fires exactly when an event from a
-    # LATER window (plus the allowed delay) has been seen
-    return (
-        events.select(win_start.alias("window_start"), F.col(type_col))
-        .withWatermark("window_start", watermark)
-        .groupBy("window_start")
-        .transformWithStateInPandas(
-            TopKProcessor(), TOPK_OUT_SCHEMA, "append", "EventTime"
-        )
-    )
-
-
 def windowed_topk_stream_gaws(
     events: DataFrame,
     ts_col: str = "ts",
@@ -851,13 +678,22 @@ def windowed_topk_stream_gaws(
     k: int = 3,
     watermark: str = "0 seconds",
 ) -> DataFrame:
-    """Dependency-free equivalent of :func:`windowed_topk_stream` on
-    ``applyInPandasWithState`` + ``EventTimeTimeout`` (no protobuf /
-    RocksDB requirement): state per window key is the (types, counts)
-    pair of parallel arrays, the timeout timestamp is the window end,
-    and the rank is emitted exactly once — when the watermark crosses
-    it and Spark calls the function with ``state.hasTimedOut``.
-    Same bounded-state argument as the TWS variant."""
+    """Streaming per-window top-k heavy hitters on
+    ``applyInPandasWithState`` + ``EventTimeTimeout`` — the batch
+    ``ts_topk_hourly`` shape, expressed as a stream.  Plain streaming
+    aggregation cannot produce this in append mode: ranking is not
+    incremental (a late row can reorder the whole window), so the
+    rank must run exactly once, when the watermark proves the window
+    complete.
+
+    Mechanics: rows are keyed by their tumbling window start; state
+    per window key is the (types, counts) pair of parallel arrays,
+    the timeout timestamp is the window end, and the rank (count
+    desc, type asc) is emitted exactly once — when the watermark
+    crosses it and Spark calls the function with
+    ``state.hasTimedOut``.  State is bounded by (windows in flight) x
+    (distinct types); the watermark is the eviction proof.  Keys
+    shard across executors, so many concurrent windows scale out."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     state_schema = "types array<string>, counts array<long>"
@@ -905,7 +741,7 @@ def windowed_topk_stream_gaws(
         .groupBy("window_start")
         .applyInPandasWithState(
             fn,
-            "window_start timestamp, event_type string, n_events long, rnk int",
+            TOPK_OUT_SCHEMA,
             state_schema,
             "append",
             GroupStateTimeout.EventTimeTimeout,
@@ -985,67 +821,4 @@ def lsh_candidate_stream(
     bands = row_band_buckets(docs)
     return bands.groupBy("band", "bucket").applyInPandasWithState(
         fn, LSH_CAND_SCHEMA, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def lsh_candidate_stream_tws(
-    docs: DataFrame,
-    bucket_cap: int = 64,
-) -> DataFrame:
-    """:func:`lsh_candidate_stream` on ``transformWithStateInPandas``
-    — identical semantics/output; the posting list is typed LIST
-    STATE (one `doc_id` row per indexed document), the natural state
-    shape for an LSH index: appends are O(1) against RocksDB instead
-    of rewriting one array blob per arrival.  Same provider/protobuf
-    requirements as :func:`data_driven_window_rollup_stream_tws`;
-    the applyInPandasWithState variant is the dependency-free
-    equivalent (parity-tested against it).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from ..scale.dedup import row_band_buckets
-
-    class LshProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._posting = handle.getListState("posting", "doc_id long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            posting = (
-                [int(r[0]) for r in self._posting.get()]
-                if self._posting.exists()
-                else []
-            )
-            n0 = len(posting)
-            out_prior, out_new = [], []
-            pdf = pd.concat(list(rows)).sort_values("doc_id")
-            for d in pdf["doc_id"]:
-                d = int(d)
-                for p in posting:
-                    if p != d:
-                        out_prior.append(p)
-                        out_new.append(d)
-                if len(posting) < bucket_cap:
-                    posting.append(d)
-            if len(posting) > n0:
-                self._posting.appendList([(d,) for d in posting[n0:]])
-            yield pd.DataFrame(
-                {
-                    "band": pd.array([key[0]] * len(out_new), dtype="int32"),
-                    "bucket": pd.array(
-                        [key[1]] * len(out_new), dtype="int64"
-                    ),
-                    "doc_prior": pd.array(out_prior, dtype="int64"),
-                    "doc_new": pd.array(out_new, dtype="int64"),
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    bands = row_band_buckets(docs)
-    return bands.groupBy("band", "bucket").transformWithStateInPandas(
-        LshProcessor(), LSH_CAND_SCHEMA, "append", "None"
     )
