@@ -3,6 +3,8 @@ F1/F2 fixtures (FIXTURES.md shapes)."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -11,7 +13,11 @@ from westtopologies_spark.ops.geo import GEO_LAT, GEO_LONG, OWL_SAMEAS, RDFS_LAB
 from westtopologies_spark.ops.model import LocationModel
 from westtopologies_spark.pipelines.location_topic_model import location_topic_model_batch
 from westtopologies_spark.pipelines.lod_explorer import lod_explorer_batch
-from westtopologies_spark.pipelines.role_analysis import role_analysis_batch, tweets_to_edges
+from westtopologies_spark.pipelines.role_analysis import (
+    role_analysis_batch,
+    roles_for_closed_windows,
+    tweets_to_edges,
+)
 from westtopologies_spark.schemas import TWEET_SCHEMA
 
 
@@ -73,6 +79,43 @@ def test_role_analysis_batch_windows(tweets):
     # window 1: alice(10) has 2 posts, bob 1, carol 1
     w1 = {r["user_id"]: r for r in roles if r["window_start"].minute == 0}
     assert w1[10]["post_count"] == 2
+
+
+def test_role_analysis_batch_drops_unparsable_created_at(spark, tweets):
+    """A tweet whose created_at does not parse has no window: it is
+    dropped (NULL under a non-ANSI session) and leaves every window's
+    roles as they were; an ANSI session fails at the parse."""
+    bad = spark.createDataFrame(
+        [_tweet(8, 20, 13, "dave", "not a date", reply_to=1)], TWEET_SCHEMA
+    )
+    with pytest.raises(Exception, match="CANNOT_PARSE_TIMESTAMP"):
+        role_analysis_batch(tweets.unionByName(bad)).collect()
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        got = set(role_analysis_batch(tweets.unionByName(bad)).collect())
+        want = set(role_analysis_batch(tweets).collect())
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert got == want
+    assert all(r["user_id"] != 13 for r in got)
+
+
+def test_role_kernel_rejects_duplicate_tweet_id(spark):
+    """A tweet_id twice in one window fails the role pass loudly,
+    naming the window and the id, instead of multiplying counts."""
+    closed = spark.createDataFrame(
+        [
+            (
+                dt.datetime(2024, 1, 1),
+                [(1, None, 10, "a"), (2, 1, 11, "b"), (2, 1, 11, "b")],
+            )
+        ],
+        "window_start timestamp, edges array<struct<tweet_id: long, parent_id: long, "
+        "author_id: long, author_screen_name: string>>",
+    )
+    with pytest.raises(Exception, match="duplicate tweet_id 2 in window 2024-01-01"):
+        roles_for_closed_windows(closed).collect()
 
 
 def test_lod_explorer_batch(spark):

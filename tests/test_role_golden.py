@@ -66,8 +66,9 @@ REPLAY = [
 ]
 
 
-@pytest.mark.parametrize("mode", ["rules", "bug_compatible"])
-def test_role_pipeline_golden_file(spark, tmp_path_factory, mode):
+def _replay(spark, tmp_path_factory, tag, bug_compatible):
+    """REPLAY as a file stream through the per-window file sink with
+    ``availableNow``; returns the finished query and the sink dir."""
     from westtopologies_spark.pipelines.role_analysis import (
         role_file_lines,
         roles_for_closed_windows,
@@ -75,17 +76,15 @@ def test_role_pipeline_golden_file(spark, tmp_path_factory, mode):
     )
     from westtopologies_spark.schemas import TWEET_SCHEMA
 
-    src = tmp_path_factory.mktemp(f"role_src_{mode}")
+    src = tmp_path_factory.mktemp(f"role_src_{tag}")
     (src / "replay.json").write_text(
         "\n".join(json.dumps(r) for r in REPLAY)
     )
-    out_dir = str(tmp_path_factory.mktemp(f"role_out_{mode}"))
-
-    bug = mode == "bug_compatible"
+    out_dir = str(tmp_path_factory.mktemp(f"role_out_{tag}"))
 
     def sink(df, _batch_id):
         # S6 per-window file sink: one directory per closed window
-        lines = role_file_lines(roles_for_closed_windows(df, bug_compatible=bug))
+        lines = role_file_lines(roles_for_closed_windows(df, bug_compatible=bug_compatible))
         lines.withColumn(
             "window_start", lines.window_start.cast("string")
         ).write.mode("append").partitionBy("window_start").text(out_dir)
@@ -99,6 +98,12 @@ def test_role_pipeline_golden_file(spark, tmp_path_factory, mode):
         .start()
     )
     q.awaitTermination(180)
+    return q, out_dir
+
+
+@pytest.mark.parametrize("mode", ["rules", "bug_compatible"])
+def test_role_pipeline_golden_file(spark, tmp_path_factory, mode):
+    _, out_dir = _replay(spark, tmp_path_factory, mode, mode == "bug_compatible")
 
     # read the sink files back: {window -> sorted lines}
     got: dict[str, list[str]] = {}
@@ -119,3 +124,18 @@ def test_role_pipeline_golden_file(spark, tmp_path_factory, mode):
     with open(FIXTURE) as f:
         golden = json.load(f)[mode]
     assert got == {w: sorted(v) for w, v in golden.items()}
+
+
+def test_role_stream_work_counters(spark, tmp_path_factory):
+    """Deterministic work counters of the role stream, which host load
+    cannot move: every micro-batch costs exactly one Spark job (the
+    sink write that consumes it), and the stream leaves no cached plan
+    behind in the session."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached = cache.numCachedEntries()
+    q, _ = _replay(spark, tmp_path_factory, "counters", False)
+    batches = {p["batchId"] for p in q.recentProgress}
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(batches) == 2  # the data batch, then the watermark's no-data batch
+    assert len(jobs) == len(batches)
+    assert cache.numCachedEntries() == cached

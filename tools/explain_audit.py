@@ -60,8 +60,7 @@ SINGLE_GROUP_OK = {"w1_exact_windows", "a4_tercile_boundaries", "a3_role_feature
 # scalar-broadcast pattern: crossJoin(broadcast(<1-row aggregate>)) —
 # nb totals row (ops.geo.nb_accept), global community-user count
 # (ops.roles.role_features). A 1-row build side makes BNLJ the right
-# physical plan; the keyed (community_col) role variant replaces it
-# with an equi join.
+# physical plan.
 SCALAR_BROADCAST_OK = {"a5_nb_accept", "a5_nb_logsum", "a3_role_features",
                        "a3_role_assignment",
                        # corpus-size N (1 row) joined onto tf-idf / PMI / LM scores

@@ -339,10 +339,7 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
 
     Distinct from connected components: LPA finds densely-connected
     COMMUNITIES (labels stop flowing across sparse cuts), components
-    only reachability. Feeds the role kernel's ``community_col`` so
-    tercile levels and role rules evaluate per community
-    (``ops.roles.tercile_levels``), the per-window vectorization
-    pattern at corpus scale.
+    only reachability.
 
     Shape per round: one hash join (labels onto the symmetric edge
     list) + one count + one per-node rank window — all keyed by node,

@@ -5,20 +5,49 @@ Reference wiring: AMQP spout -> DiscussionTreeBolt -> RoleAnalysisBolt
 `id \\t username \\t role` per user per window
 (RoleAnalysisBolt.java:111-120).
 
-Engine shape: parse -> delete-filter -> edge build (with synthetic
-unobserved ancestors) -> window assignment -> community-keyed role
-kernel. ALL windows are processed in one distributed plan (the
-community column threads through every aggregation) — no per-window
-driver loop, unlike the reference's one-window-at-a-time executor.
+Engine shape: parse -> delete-filter -> edge projection -> 10-minute
+window -> one row per window carrying the window's whole edge list ->
+the per-window role kernel (``ops.roles.window_roles``), applied to
+every window row in ONE ``mapInArrow`` pass. Like the reference's
+RoleAnalysisBolt, the kernel sees one finished window at a time, but
+many windows run side by side across tasks, and the pass adds no
+shuffle, persist or eager action to the plan that feeds it.
+
+The streaming path (:func:`windowed_edge_sets_stream` +
+:func:`roles_for_closed_windows` in ``foreachBatch``) and the batch
+path (:func:`role_analysis_batch`) share the edge projection and the
+kernel pass, so they agree by construction.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..ops.relational import derive_retweet_flag, dummy_parents, filter_deletes, parse_twitter_ts
-from ..ops.roles import assign_roles, role_features, tercile_levels
+from ..ops.roles import window_roles
+
+EDGE_FIELDS = ("tweet_id", "parent_id", "author_id", "author_screen_name")
+ROLES_SCHEMA = "window_start timestamp, user_id long, post_count long, role string, username string"
+
+
+def _edge_columns() -> list[Column]:
+    """The :data:`EDGE_FIELDS` of a delete-filtered, retweet-flagged
+    tweet row."""
+    return [
+        F.col("id_str").cast("long").alias("tweet_id"),
+        F.col("parent_id_str").cast("long").alias("parent_id"),
+        F.col("user.id_str").cast("long").alias("author_id"),
+        # P11 username cleanup (StormCommunityFactory#cleanUserName)
+        # rides the edge so the sink can emit `id \t username \t role`
+        F.regexp_replace(F.col("user.screen_name"), r"\s", "").alias("author_screen_name"),
+    ]
+
+
+def _edges(tweets: DataFrame) -> DataFrame:
+    """(ts, *EDGE_FIELDS) per tweet, deletes dropped."""
+    base = derive_retweet_flag(filter_deletes(tweets))
+    return base.select(parse_twitter_ts("created_at").alias("ts"), *_edge_columns())
 
 
 def tweets_to_edges(tweets: DataFrame) -> DataFrame:
@@ -28,10 +57,7 @@ def tweets_to_edges(tweets: DataFrame) -> DataFrame:
     base = filter_deletes(tweets)
     base = derive_retweet_flag(base)
     edges = base.select(
-        F.col("id_str").cast("long").alias("tweet_id"),
-        F.col("parent_id_str").cast("long").alias("parent_id"),
-        F.col("user.id_str").cast("long").alias("author_id"),
-        F.regexp_replace(F.col("user.screen_name"), r"\s", "").alias("author_screen_name"),
+        *_edge_columns(),
         parse_twitter_ts("created_at").alias("ts"),
         F.col("text"),
         F.lit(True).alias("observed"),
@@ -53,36 +79,29 @@ def tweets_to_edges(tweets: DataFrame) -> DataFrame:
     return edges.unionByName(dummies)
 
 
+def _edge_list() -> Column:
+    return F.collect_list(F.struct(*EDGE_FIELDS)).alias("edges")
+
+
 def role_analysis_batch(
     tweets: DataFrame, window: str = "10 minutes", bug_compatible: bool = False
 ) -> DataFrame:
     """Windowed role assignment (epoch-aligned window mode; the exact
-    data-driven window lives in streaming/stateful.py).
+    data-driven window lives in streaming/stateful.py): the streaming
+    path's edge projection and kernel pass over every window at once.
 
-    Dummy ancestors carry no timestamp; the reference keeps them in
-    the window whose reply created them — we attach each dummy to the
-    window of its earliest observed descendant-reply (min child ts).
+    A parent the window does not carry is a root of that window's
+    forest, as in the streaming path. A tweet whose ``created_at`` does
+    not parse (NULL under a non-ANSI session; an ANSI session raises at
+    the parse) has no window and is dropped.
     """
-    edges = tweets_to_edges(tweets)
-    observed = edges.filter(F.col("observed"))
-    win = F.window("ts", window).getField("start")
-    observed = observed.withColumn("window_start", win)
-    # window for dummies: earliest window among replies pointing at them
-    dummy_windows = (
-        observed.filter(F.col("parent_id").isNotNull())
-        .groupBy(F.col("parent_id").alias("tweet_id"))
-        .agg(F.min("window_start").alias("window_start"))
+    closed = (
+        _edges(tweets)
+        .filter(F.col("ts").isNotNull())
+        .groupBy(F.window("ts", window).getField("start").alias("window_start"))
+        .agg(_edge_list())
     )
-    dummies = (
-        edges.filter(~F.col("observed"))
-        .drop("window_start")
-        .join(dummy_windows, "tweet_id", "inner")
-    )
-    all_nodes = observed.unionByName(dummies)
-    feats = role_features(all_nodes, community_col="window_start")
-    leveled = tercile_levels(feats, community_col="window_start")
-    roles = assign_roles(leveled, bug_compatible=bug_compatible)
-    return roles.select("window_start", "user_id", "post_count", "role")
+    return roles_for_closed_windows(closed, bug_compatible).drop("username")
 
 
 def windowed_edge_sets_stream(
@@ -101,80 +120,58 @@ def windowed_edge_sets_stream(
     one array — bounded by the 10-minute window; shard ``groupBy``
     further (e.g. by conversation root) if a window outgrows a task.
     """
-    base = filter_deletes(tweets)
-    base = derive_retweet_flag(base)
-    edges = base.select(
-        parse_twitter_ts("created_at").alias("ts"),
-        F.col("id_str").cast("long").alias("tweet_id"),
-        F.col("parent_id_str").cast("long").alias("parent_id"),
-        F.col("user.id_str").cast("long").alias("author_id"),
-        # P11 username cleanup (StormCommunityFactory#cleanUserName)
-        # rides the edge so the sink can emit `id \t username \t role`
-        F.regexp_replace(F.col("user.screen_name"), r"\s", "").alias(
-            "author_screen_name"
-        ),
-    )
     return (
-        edges.withWatermark("ts", watermark)
+        _edges(tweets)
+        .withWatermark("ts", watermark)
         # group on the window() expression itself: append-mode closed-
         # window tracking attaches to it (getField would detach it)
         .groupBy(F.window("ts", window).alias("w"))
-        .agg(
-            F.collect_list(
-                F.struct(
-                    "tweet_id", "parent_id", "author_id", "author_screen_name"
-                )
-            ).alias("edges")
-        )
+        .agg(_edge_list())
         .select(F.col("w.start").alias("window_start"), "edges")
     )
 
 
-def roles_for_closed_windows(
-    closed: DataFrame, bug_compatible: bool = False
-) -> DataFrame:
-    """foreachBatch body: closed windows (window_start, edges array)
-    -> per-user roles. Re-uses the batch kernel with
-    ``community_col`` so a micro-batch containing several closed
-    windows is still ONE distributed plan."""
-    exploded = closed.select("window_start", F.explode("edges").alias("e"))
-    nodes = exploded.select(
-        "window_start", "e.tweet_id", "e.parent_id", "e.author_id"
-    )
-    dummies = (
-        nodes.filter(F.col("parent_id").isNotNull())
-        .join(
-            nodes.select("window_start", F.col("tweet_id").alias("parent_id")),
-            ["window_start", "parent_id"],
-            "left_anti",
-        )
-        .groupBy("window_start", F.col("parent_id").alias("tweet_id"))
-        .agg(F.lit(None).cast("long").alias("parent_id"), F.lit(None).cast("long").alias("author_id"))
-        .select("window_start", "tweet_id", "parent_id", "author_id")
-    )
-    all_nodes = nodes.unionByName(dummies)
-    feats = role_features(all_nodes, community_col="window_start")
-    leveled = tercile_levels(feats, community_col="window_start")
-    roles = assign_roles(leveled, bug_compatible=bug_compatible)
-    roles = roles.select("window_start", "user_id", "post_count", "role")
-    # attach usernames when the edge struct carries them (the
-    # streaming path does; min() = deterministic pick of the cleaned
-    # screen name the reference reads off the user's posts)
-    if "author_screen_name" in [
-        f.name for f in exploded.schema["e"].dataType.fields
-    ]:
-        names = (
-            exploded.select(
-                "window_start",
-                F.col("e.author_id").alias("user_id"),
-                F.col("e.author_screen_name").alias("username"),
+def roles_for_closed_windows(closed: DataFrame, bug_compatible: bool = False) -> DataFrame:
+    """foreachBatch body: closed windows ``(window_start, edges)`` ->
+    ``(window_start, user_id, post_count, role, username)`` per user.
+
+    One ``mapInArrow`` pass runs :func:`~..ops.roles.window_roles` on
+    each window row: no shuffle, no persist, no eager action, so a
+    micro-batch costs the one job that consumes it (the sink write),
+    whether it holds no closed window or several. A duplicate
+    ``tweet_id`` within a window fails the task with a ``ValueError``
+    naming the window and the id.
+    """
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            lists = b.column("edges")
+            flat = lists.flatten()
+            cols = dict(zip([f.name for f in flat.type], flat.flatten()))
+            rows = list(zip(*(cols[f].to_pylist() for f in EDGE_FIELDS)))
+            offsets = lists.offsets.to_pylist()
+            starts = b.column("window_start")
+            take, out = [], []
+            for i in range(b.num_rows):
+                lo, hi = offsets[i] - offsets[0], offsets[i + 1] - offsets[0]
+                roles = window_roles(rows[lo:hi], bug_compatible, window=starts[i].as_py())
+                take += [i] * len(roles)
+                out += roles
+            users, posts, role, names = zip(*out) if out else ((), (), (), ())
+            yield pa.RecordBatch.from_arrays(
+                [
+                    starts.take(pa.array(take, pa.int64())),
+                    pa.array(users, pa.int64()),
+                    pa.array(posts, pa.int64()),
+                    pa.array(role, pa.string()),
+                    pa.array(names, pa.string()),
+                ],
+                names=["window_start", "user_id", "post_count", "role", "username"],
             )
-            .filter(F.col("username").isNotNull())
-            .groupBy("window_start", "user_id")
-            .agg(F.min("username").alias("username"))
-        )
-        roles = roles.join(names, ["window_start", "user_id"], "left")
-    return roles
+
+    return closed.select("window_start", "edges").mapInArrow(kernel, ROLES_SCHEMA)
 
 
 def role_file_lines(roles: DataFrame) -> DataFrame:
@@ -182,18 +179,12 @@ def role_file_lines(roles: DataFrame) -> DataFrame:
     one file per closed window, each user a line
     ``id \\t username \\t role``.  Returns (window_start, value) so the
     file sink partitions by window — one directory per window, the
-    Spark analog of the per-window file.  Edge sets built without
-    screen names (roles_for_closed_windows only attaches ``username``
-    when the struct carries it) emit an empty username field, like
-    the reference does for unobserved users."""
-    username = (
-        F.coalesce("username", F.lit(""))
-        if "username" in roles.columns
-        else F.lit("")
-    )
+    Spark analog of the per-window file.  A user without a screen name
+    gets an empty username field, like the reference does for
+    unobserved users."""
     return roles.select(
         "window_start",
         F.concat_ws(
-            "\t", F.col("user_id").cast("string"), username, "role"
+            "\t", F.col("user_id").cast("string"), F.coalesce("username", F.lit("")), "role"
         ).alias("value"),
     )

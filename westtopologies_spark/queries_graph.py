@@ -339,8 +339,7 @@ def _lpa_sql() -> str:
     "rounds, mode-of-neighbors with min-label tie-break — fully "
     "deterministic, so the oracle replays the identical trace): "
     "labels stop flowing across sparse cuts, unlike connected "
-    "components' pure reachability. Feeds the role kernel's "
-    "community_col for per-community tercile levels. Per round one "
+    "components' pure reachability. Per round one "
     "keyed join + count + rank window. Graph-analytics extension.",
 )
 def gr_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
