@@ -232,10 +232,11 @@ def test_incremental_minhash_consistent_with_full(spark, sf_dir):
     inc = {
         (r["doc_base"], r["doc_new"], r["jaccard"])
         for r in DD.incremental_minhash_pairs(
-            docs.filter(h != V.INSERT_SLOT), docs.filter(h == V.INSERT_SLOT)
+            DD.row_shingle_arrays(docs.filter(h != V.INSERT_SLOT)),
+            DD.row_shingle_arrays(docs.filter(h == V.INSERT_SLOT)),
         ).collect()
     }
-    full = DD.minhash_lsh_dedup(docs, vocab_mode="char")
+    full = DD.minhash_lsh_dedup(docs)
     cross = set()
     for r in full.collect():
         ha, hb = r["doc_a"] % V.SNAP_MOD, r["doc_b"] % V.SNAP_MOD

@@ -16,7 +16,6 @@ from westtopologies_spark.pipelines.lod_explorer import lod_explorer_batch
 from westtopologies_spark.pipelines.role_analysis import (
     role_analysis_batch,
     roles_for_closed_windows,
-    tweets_to_edges,
 )
 from westtopologies_spark.schemas import TWEET_SCHEMA
 
@@ -56,18 +55,6 @@ def tweets(spark):
         _tweet(7, 8, 10, "alice a", "Mon Jan 01 00:13:00 +0000 2024", reply_to=7),
     ]
     return spark.createDataFrame(rows, TWEET_SCHEMA)
-
-
-def test_tweets_to_edges_dummies(tweets):
-    edges = tweets_to_edges(tweets).collect()
-    by_id = {r["tweet_id"]: r for r in edges}
-    assert by_id[3]["parent_id"] == 2
-    assert by_id[6]["parent_id"] == 1  # retweet source overrides reply
-    assert by_id[6]["retweet"] is True
-    assert by_id[1]["author_screen_name"] == "alicea"  # whitespace stripped
-    assert 5 not in by_id  # delete event dropped
-    dummy = by_id[99]  # unseen parent materialized
-    assert dummy["observed"] is False and dummy["author_id"] is None
 
 
 def test_role_analysis_batch_windows(tweets):

@@ -728,9 +728,7 @@ def test_ingest_dedup_stream_decomposes_batch_dedup(
     }
     expect = {
         (min(r.doc_a, r.doc_b), max(r.doc_a, r.doc_b), r.jaccard)
-        for r in D.minhash_lsh_dedup(
-            docs, threshold=0.3, vocab_mode="char"
-        ).collect()
+        for r in D.minhash_lsh_dedup(docs, threshold=0.3).collect()
     }
     assert got == expect
     assert len(got) > 0

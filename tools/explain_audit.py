@@ -31,7 +31,7 @@ from westtopologies_spark.session import get_spark  # noqa: E402
 
 # global-window vocabulary/dictionary ranking: the window input is the
 # distinct vocabulary (orders of magnitude smaller than the corpus);
-# the xxhash64 path in scale.dedup.tokens_with_ids avoids it entirely.
+# the char-hash encoding (scale.dedup.char_hash_tid) avoids it entirely.
 VOCAB_RANK_OK = {
     "x5_term_index_encode",
     "dd_minhash_lsh",

@@ -60,44 +60,22 @@ def ingest_dedup_stream(
     def body(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_df = batch_df.persist()
-        out = None
+        arr_new = row_shingle_arrays(batch_df)
+        out = minhash_lsh_dedup(batch_df, threshold=threshold)
         if os.path.isdir(corpus_dir) and any(
             f.endswith(".parquet") for f in os.listdir(corpus_dir)
         ):
+            # the delta-vs-corpus leg probes the STORED arrays, so the
+            # corpus is never re-tokenized
             corpus = spark.read.parquet(corpus_dir)
-            # delta-vs-corpus leg probes the STORED arrays: pass them
-            # through the array-kernel confirm via a corpus frame that
-            # already has _sh (incremental_minhash_pairs re-derives
-            # from text; the stored index lets us skip that)
-            from pyspark.sql import functions as F
-
-            from ..scale.dedup import (
-                _band_rows_from_arrays,
-                jaccard_of_pairs_arrays,
-            )
-
-            arr_new = row_shingle_arrays(batch_df).persist()
-            cand = (
-                _band_rows_from_arrays(corpus)
-                .select(F.col("doc_id").alias("doc_a"), "band", "bucket")
-                .join(
-                    _band_rows_from_arrays(arr_new).select(
-                        F.col("doc_id").alias("doc_b"), "band", "bucket"
-                    ),
-                    ["band", "bucket"],
-                )
-                .select("doc_a", "doc_b")
-                .distinct()
-            )
-            out = jaccard_of_pairs_arrays(
-                cand, corpus.unionByName(arr_new)
-            ).filter(F.col("jaccard") >= threshold)
-        self_pairs = minhash_lsh_dedup(batch_df, threshold=threshold, vocab_mode="char")
-        out = self_pairs if out is None else out.unionByName(self_pairs)
+            prior = incremental_minhash_pairs(corpus, arr_new, threshold=threshold)
+            out = prior.withColumnsRenamed(
+                {"doc_base": "doc_a", "doc_new": "doc_b"}
+            ).unionByName(out)
         out.write.mode("append").parquet(pairs_dir)
         # append AFTER the probe: this trigger's docs must not match
         # themselves through the corpus leg
-        row_shingle_arrays(batch_df).write.mode("append").parquet(corpus_dir)
+        arr_new.write.mode("append").parquet(corpus_dir)
         batch_df.unpersist()
 
     w = docs_stream.writeStream.foreachBatch(body)

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..ops.relational import derive_retweet_flag, dummy_parents, filter_deletes, parse_twitter_ts
+from ..ops.relational import derive_retweet_flag, filter_deletes, parse_twitter_ts
 from ..ops.roles import window_roles
 
 EDGE_FIELDS = ("tweet_id", "parent_id", "author_id", "author_screen_name")
@@ -48,35 +48,6 @@ def _edges(tweets: DataFrame) -> DataFrame:
     """(ts, *EDGE_FIELDS) per tweet, deletes dropped."""
     base = derive_retweet_flag(filter_deletes(tweets))
     return base.select(parse_twitter_ts("created_at").alias("ts"), *_edge_columns())
-
-
-def tweets_to_edges(tweets: DataFrame) -> DataFrame:
-    """F1 tweet rows -> flat discussion edges, including the
-    reference's dummy unobserved ancestors (J1,
-    DiscussionTreeBolt.java:130-148)."""
-    base = filter_deletes(tweets)
-    base = derive_retweet_flag(base)
-    edges = base.select(
-        *_edge_columns(),
-        parse_twitter_ts("created_at").alias("ts"),
-        F.col("text"),
-        F.lit(True).alias("observed"),
-        F.col("retweet"),
-    )
-    dummies = dummy_parents(edges).select(
-        F.col("tweet_id"),
-        F.lit(None).cast("long").alias("parent_id"),
-        # the reference fills dummy author info from the replying
-        # tweet's in_reply_to fields when available; unobserved
-        # ancestors without it carry nulls
-        F.lit(None).cast("long").alias("author_id"),
-        F.lit(None).cast("string").alias("author_screen_name"),
-        F.lit(None).cast("timestamp").alias("ts"),
-        F.lit(None).cast("string").alias("text"),
-        F.lit(False).alias("observed"),
-        F.lit(False).alias("retweet"),
-    )
-    return edges.unionByName(dummies)
 
 
 def _edge_list() -> Column:

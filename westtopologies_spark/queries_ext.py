@@ -1317,7 +1317,6 @@ def dd_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         DD.incremental_minhash_pairs(
             arr.filter(h != V.INSERT_SLOT),
             arr.filter(h == V.INSERT_SLOT),
-            pre_arrayed=True,
         ),
         {"jaccard": 4},
     )
@@ -1845,7 +1844,7 @@ def dd_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scale import dedup
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_dedup(docs, vocab_mode="char")
+    pairs = dedup.minhash_lsh_dedup(docs)
     return dedup.connected_components(pairs)
 
 
@@ -4142,7 +4141,7 @@ def dd_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scale import dedup
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_dedup(docs, vocab_mode="char")
+    pairs = dedup.minhash_lsh_dedup(docs)
     comp = dedup.connected_components(pairs)
     sz = comp.groupBy("component_id").agg(F.count(F.lit(1)).alias("n"))
     return (

@@ -592,9 +592,7 @@ HASH_FEATURE_BUCKETS = 32
 def tx_hash_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scale import dedup
 
-    toks = dedup.tokens_with_ids(
-        _t(spark, sf_dir, "documents"), vocab_mode="char"
-    )
+    toks = dedup.tokens_with_ids(_t(spark, sf_dir, "documents"))
     return (
         toks.withColumn(
             "bucket", F.pmod("tid", F.lit(HASH_FEATURE_BUCKETS)).cast("int")

@@ -607,7 +607,7 @@ def tx_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scale import dedup
 
     docs = _t(spark, sf_dir, "documents")
-    sh = dedup.exploded_shingles(docs, vocab_mode="char")
+    sh = dedup.exploded_shingles(docs)
     first = sh.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     novel = F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0)
     return (

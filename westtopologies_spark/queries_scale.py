@@ -44,7 +44,7 @@ _TOKS_CTE = """
     )
 """
 
-# char-hash encoding (dedup.char_hash_tid / vocab_mode="char"): the
+# char-hash encoding (dedup.char_hash_tid): the
 # token id is a pure expression of the token's code points — no
 # vocabulary CTE at all, mirroring the Spark side's shuffle-free map
 _TOKS_CHAR_CTE = f"""
@@ -153,7 +153,7 @@ def _minhash_sql(threshold: float = C.MINHASH_JACCARD_THRESHOLD) -> str:
 )
 def dd_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_dedup(docs, vocab_mode="char")
+    return dedup.minhash_lsh_dedup(docs)
 
 
 @_register(
@@ -201,7 +201,7 @@ def _ngram_jaccard_sql() -> str:
 )
 def dd_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    return dedup.ngram_jaccard_pairs(docs, vocab_mode="char")
+    return dedup.ngram_jaccard_pairs(docs)
 
 
 def _overlap_coeff_sql() -> str:
@@ -237,7 +237,7 @@ def _overlap_coeff_sql() -> str:
 def dd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     return _as_scaled_int(
-        dedup.overlap_coefficient_pairs(docs, vocab_mode="char"), {"overlap": 4}
+        dedup.overlap_coefficient_pairs(docs), {"overlap": 4}
     )
 
 
@@ -251,7 +251,7 @@ def dd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dd_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    return dedup.prefix_jaccard_pairs(docs, vocab_mode="char")
+    return dedup.prefix_jaccard_pairs(docs)
 
 
 def _simhash_sql() -> str:
@@ -602,7 +602,7 @@ def _fingerprint_sql() -> str:
     "dictionary-encoded token stream (order-sensitive). Scale ext.",
 )
 def tx_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textstats.fingerprints(_t(spark, sf_dir, "documents"), vocab_mode="char")
+    return textstats.fingerprints(_t(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -841,7 +841,7 @@ def _minhash_audit_sql() -> str:
 )
 def dd_minhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    return dedup.minhash_estimate_audit(docs, vocab_mode="char")
+    return dedup.minhash_estimate_audit(docs)
 
 
 @_register(
@@ -855,13 +855,13 @@ def dd_minhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Shingle document-frequency histogram (how many shingles "
     "occur in exactly df docs): the skew profile that sizes every "
     "inverted-index join in the dedup family — the heavy tail IS "
-    "the hot-key risk max_df pruning and AQE skew-split guard "
-    "against, measured rather than assumed. Two partial-agg "
+    "the hot-key risk AQE skew splitting guards against, measured "
+    "rather than assumed. Two partial-agg "
     "shuffles, output bounded by max(df). Scale extension.",
 )
 def dd_shingle_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    shingles = dedup.exploded_shingles(docs, vocab_mode="char")
+    shingles = dedup.exploded_shingles(docs)
     df = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     return df.groupBy("df").agg(F.count(F.lit(1)).alias("n_shingles"))
 
@@ -947,7 +947,7 @@ def dd_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cut the whole MinHash pipeline (shingle -> band -> confirm) and
     # the exact-group aggregation execute once per consuming stage
     dup_groups = groups.filter(F.col("n_copies") > 1).localCheckpoint()
-    pairs = dedup.minhash_lsh_dedup(docs, vocab_mode="char").localCheckpoint()
+    pairs = dedup.minhash_lsh_dedup(docs).localCheckpoint()
 
     def row(stage: str, df_agg) -> DataFrame:
         return df_agg.select(

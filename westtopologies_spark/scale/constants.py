@@ -4,8 +4,8 @@ Every hash here is pure int64 arithmetic (multiply/add/mod/shift)
 so the Spark plan and the DuckDB oracle SQL — both generated from
 THESE constants — produce bit-identical values. No engine-specific
 hash function (xxhash64, md5, …) appears on the oracle-checked
-path; content hashing is offered separately as the no-global-sort
-scale path (see ``dedup.tokens_with_ids``).
+path: shingle pipelines encode tokens with ``dedup.char_hash_tid``,
+which is itself built from these constants.
 
 All products are bounded to fit int64: operands are < 2**32 and
 multiplicands < 2**20 wherever two variables multiply.

@@ -12,13 +12,15 @@ Scale notes (100 TB):
 - Candidate generation never does an all-pairs cross join: MinHash
   and SimHash join on LSH bucket keys, n-gram Jaccard joins on the
   inverted shingle index. Shuffles are keyed by bucket/shingle and
-  benefit from AQE skew splitting (hot shingles can be pruned with
-  ``max_df``).
-- Dictionary encoding has two modes: ``deterministic_vocab=True``
-  ranks the distinct vocabulary (exactly reproducible in the DuckDB
-  oracle; the rank is a global sort over the *vocabulary*, which is
-  orders of magnitude smaller than the corpus), and the default
-  scale path hashes tokens with xxhash64 (no global sort at all).
+  benefit from AQE skew splitting.
+- Every shingle pipeline encodes tokens one way: :func:`char_hash_tid`,
+  a polynomial hash over the token's code points.  It is a pure
+  per-row expression (no vocabulary build, no shuffle), so per-doc
+  shingle sets materialize in the scan stage
+  (:func:`row_shingle_arrays`), and it is engine-independent, so the
+  DuckDB oracle reproduces every id exactly.  The one exception is
+  :func:`tokens_with_ids`'s ``"rank"`` mode, the dense 1..|V|
+  dictionary ids SimHash's oracle replays.
 - All hash arithmetic lives in :mod:`.constants` and is pure int64
   multiply/add/mod, identical in the SQL oracle.
 """
@@ -110,38 +112,27 @@ def tokens_with_ids(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    deterministic_vocab: bool = False,
-    vocab_mode: str | None = None,
+    vocab_mode: str = "char",
 ) -> DataFrame:
     """(id, pos, tid): whitespace tokens dictionary-encoded to int64.
 
-    ``vocab_mode`` (overrides the legacy ``deterministic_vocab``
-    flag):
-
-    - ``"hash"`` (default): ``tid = pmod(xxhash64(token),
-      SHINGLE_P)`` — a pure map, fastest, engine-specific hash (not
-      oracle-reproducible).
-    - ``"char"``: :func:`char_hash_tid` — also a pure map (identical
-      scale profile to ``hash``), engine-independent arithmetic, so
-      the DuckDB oracle reproduces it exactly. The dedup/fingerprint
-      catalog queries use this.
+    - ``"char"`` (default): :func:`char_hash_tid` — a pure map, the
+      encoding of every shingle pipeline in this module.
     - ``"rank"``: ranks the distinct vocabulary by token via
       :func:`distributed_rank` — ids are dense 1..|V| (what a real
       dictionary-encoded store would persist); costs a vocabulary
       shuffle + broadcast join.
     """
-    mode = vocab_mode or ("rank" if deterministic_vocab else "hash")
+    if vocab_mode not in ("char", "rank"):
+        raise ValueError(f"tokens_with_ids: unknown vocab_mode {vocab_mode!r}")
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(F.split(F.col(text_col), " ")).alias("pos0", "token"),
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "token")
-    if mode == "hash":
-        return toks.withColumn("tid", F.pmod(F.xxhash64("token"), F.lit(C.SHINGLE_P)))
-    if mode == "char":
+    if vocab_mode == "char":
         return toks.withColumn("tid", char_hash_tid(F.col("token")))
-    # mode == "rank": the token stream feeds both the vocabulary
-    # build and the encode join — pin it so the corpus scan + explode
-    # runs once, not twice
+    # the token stream feeds both the vocabulary build and the encode
+    # join — pin it so the corpus scan + explode runs once, not twice
     toks = toks.persist()
     vocab = distributed_rank(toks.select("token").distinct(), "token", rank_col="tid")
     return toks.join(F.broadcast(vocab), "token").select("doc_id", "pos", "tid")
@@ -156,29 +147,24 @@ def doc_token_ids(tokens: DataFrame) -> DataFrame:
     )
 
 
+def _tid(token: Column) -> Column:
+    # one-parameter wrapper: PySpark maps a lambda's parameter count
+    # onto higher-order-function arguments, so passing char_hash_tid
+    # (token, p) to F.transform would bind the element index to p
+    return char_hash_tid(token)
+
+
 def doc_tids(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    vocab_mode: str = "char",
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(doc_id, tids) computed ENTIRELY in the scan stage — the
-    in-row equivalent of ``doc_token_ids(tokens_with_ids(docs))`` for
-    the two pure-map encodings (r8, guide §2.4: the exploded chain
-    posexplodes the corpus token stream and shuffles it back together
-    on doc_id just to re-form an array whose every element is a pure
-    function of the row).  ``rank`` mode inherently needs the
-    vocabulary shuffle and stays on the exploded path.  NULL-text
-    docs are filtered to match the exploded chain (posexplode(NULL)
-    emits no rows, so those doc_ids never reach the groupBy)."""
-    if vocab_mode == "char":
-        def tid_fn(t: Column) -> Column:
-            return char_hash_tid(t)
-    elif vocab_mode == "hash":
-        def tid_fn(t: Column) -> Column:
-            return F.pmod(F.xxhash64(t), F.lit(C.SHINGLE_P))
-    else:  # pragma: no cover - guarded by callers
-        raise ValueError(f"doc_tids: unsupported mode {vocab_mode!r}")
+    in-row equivalent of ``doc_token_ids(tokens_with_ids(docs))``
+    (r8, guide §2.4: the exploded chain posexplodes the corpus token
+    stream and shuffles it back together on doc_id just to re-form an
+    array whose every element is a pure function of the row).
+    NULL-text docs are filtered to match the exploded chain
+    (posexplode(NULL) emits no rows, so those doc_ids never reach the
+    groupBy)."""
     # two-step select: materialize the split array as a projection
     # before the transform references it (the CollapseProject O(len^2)
     # trap — see row_shingle_arrays)
@@ -186,29 +172,22 @@ def doc_tids(
         F.col(id_col).alias("doc_id"),
         F.split(F.col(text_col), " ").alias("_toks"),
     )
-    return toks.select("doc_id", F.transform("_toks", tid_fn).alias("tids"))
+    return toks.select("doc_id", F.transform("_toks", _tid).alias("tids"))
 
 
-def exploded_shingles(
-    docs: DataFrame,
-    vocab_mode: str | None = None,
-    deterministic_vocab: bool = False,
-) -> DataFrame:
+def exploded_shingles(docs: DataFrame) -> DataFrame:
     """(doc_id, shingle): the exploded distinct-shingle index, with
-    the per-doc shingle SETS built in the scan stage for the pure-map
-    encodings (r8): ``row_shingle_arrays`` + explode replaces the
-    ``tokens_with_ids -> doc_token_ids -> doc_shingles`` chain, whose
-    three corpus-wide moves (posexplode, groupBy(doc_id) re-collect,
-    corpus-wide ``.distinct()``) all collapse into in-row expressions
+    the per-doc shingle SETS built in the scan stage (r8):
+    ``row_shingle_arrays`` + explode replaces the ``tokens_with_ids
+    -> doc_token_ids -> doc_shingles`` chain, whose three corpus-wide
+    moves (posexplode, groupBy(doc_id) re-collect, corpus-wide
+    ``.distinct()``) all collapse into in-row expressions
     (``array_distinct`` dedups within the only scope a shingle can
     repeat in).  Value-identical (pinned by the row-vs-exploded
-    parity tests); ``rank`` mode keeps the exploded path."""
-    mode = vocab_mode or ("rank" if deterministic_vocab else "hash")
-    if mode in ("char", "hash"):
-        return row_shingle_arrays(docs, mode=mode).select(
-            "doc_id", F.explode("_sh").alias("shingle")
-        )
-    return doc_shingles(doc_token_ids(tokens_with_ids(docs, vocab_mode=mode)))
+    parity tests)."""
+    return row_shingle_arrays(docs).select(
+        "doc_id", F.explode("_sh").alias("shingle")
+    )
 
 
 def doc_shingles(token_ids: DataFrame, n: int = C.SHINGLE_N) -> DataFrame:
@@ -314,16 +293,13 @@ def row_shingle_arrays(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = C.SHINGLE_N,
-    mode: str = "char",
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """(doc_id[, keep_cols], _sh): DISTINCT shingle-id array per
     document computed ENTIRELY in the scan stage — no explode, no
     groupBy.  Value-identical to the exploded chain
     ``tokens_with_ids -> doc_token_ids -> doc_shingles`` collected
-    back per doc (pinned by parity tests), for the two pure-map token
-    encodings (``char``/``hash``; ``rank`` inherently needs a
-    vocabulary shuffle and stays on the exploded path).
+    back per doc (pinned by parity tests).
 
     This is the scale-defining difference for the whole MinHash
     family: the exploded (doc_id, shingle) index is O(corpus tokens)
@@ -333,14 +309,6 @@ def row_shingle_arrays(
     shuffles until the band-bucket join itself.  Docs with fewer than
     ``n`` tokens emit no rows (parity: they have no shingles).
     """
-    if mode == "char":
-        def tid_fn(t: Column) -> Column:
-            return char_hash_tid(t)
-    elif mode == "hash":
-        def tid_fn(t: Column) -> Column:
-            return F.pmod(F.xxhash64(t), F.lit(C.SHINGLE_P))
-    else:  # pragma: no cover - guarded by callers
-        raise ValueError(f"row_shingle_arrays: unsupported mode {mode!r}")
     # length gate on the CHEAP split array, not on the hashed-id
     # array: a filter on size(_tids) gets pushed below the projection
     # and inlines the whole char-hash transform into the predicate —
@@ -361,7 +329,7 @@ def row_shingle_arrays(
     tids = toks.select(
         "doc_id",
         *keep_cols,
-        F.transform("_toks", tid_fn).alias("_tids"),
+        F.transform("_toks", _tid).alias("_tids"),
     )
 
     # r8: sliding-window fold via zip_with over n shifted slices, NOT
@@ -463,7 +431,7 @@ def row_band_buckets(
 ) -> DataFrame:
     """(doc_id[, keep_cols], band, bucket) computed ENTIRELY in the
     scan stage — value-identical to the batch chain
-    ``tokens_with_ids(vocab_mode='char') -> doc_shingles ->
+    ``tokens_with_ids -> doc_token_ids -> doc_shingles ->
     minhash_signatures -> band_buckets`` (pinned by a parity test),
     with ZERO aggregation (see :func:`row_shingle_arrays`).
 
@@ -499,25 +467,6 @@ def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
     return _pairs_from_band_rows(band_buckets(signatures))
 
 
-def jaccard_of_pairs(pairs: DataFrame, shingles: DataFrame) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs.
-
-    Confirms by intersecting the two docs' shingle ARRAYS — one
-    groupBy of the (persisted) index into per-doc arrays, then two
-    hash joins keyed on doc_id and an O(|A|+|B|) ``array_intersect``
-    per candidate.  The previous formulation re-ran the full
-    inverted-index self-join (every co-occurring pair in the corpus)
-    just to score a small candidate set — exactly the quadratic work
-    prefix/LSH candidate generation exists to avoid; on a skewed
-    corpus the hot common shingles dominated that join regardless of
-    how few candidates survived.  Pairs with an empty intersection
-    are dropped (parity with the inverted-index formulation, which
-    never enumerates them).
-    """
-    arrs = shingles.groupBy("doc_id").agg(F.collect_list("shingle").alias("_sh"))
-    return jaccard_of_pairs_arrays(pairs, arrs)
-
-
 def jaccard_of_pairs_arrays(pairs: DataFrame, arrs: DataFrame) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs, from per-doc
     DISTINCT shingle arrays (doc_id, _sh) — the shared confirm kernel
@@ -546,42 +495,26 @@ def jaccard_of_pairs_arrays(pairs: DataFrame, arrs: DataFrame) -> DataFrame:
 
 
 def minhash_lsh_dedup(
-    docs: DataFrame,
-    threshold: float = C.MINHASH_JACCARD_THRESHOLD,
-    deterministic_vocab: bool = False,
-    vocab_mode: str | None = None,
+    docs: DataFrame, threshold: float = C.MINHASH_JACCARD_THRESHOLD
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle -> signature ->
     banded candidates -> exact-Jaccard confirm >= threshold.
 
-    For the pure-map token encodings (``char``/``hash``) the whole
-    pre-join pipeline runs on per-row shingle ARRAYS
+    The whole pre-join pipeline runs on per-row shingle ARRAYS
     (:func:`row_shingle_arrays`): signatures fold inside each row and
     the confirm reuses the same arrays, so the only shuffles left are
     the band-bucket self-join and the candidate joins — the exploded
-    (doc_id, shingle) index (O(corpus tokens) rows, shuffled twice on
-    the legacy path) never materializes.  ``rank`` mode keeps the
-    exploded path (its encoding needs the vocabulary shuffle).
-    Results are identical across paths (parity-tested).
+    (doc_id, shingle) index (O(corpus tokens) rows) never
+    materializes.  Results equal the exploded chain's
+    (parity-tested) and the DuckDB oracle's.
 
     The per-doc array frame is persisted: it feeds the band rows and
     both sides of the confirm join."""
-    mode = vocab_mode or ("rank" if deterministic_vocab else "hash")
-    if mode in ("char", "hash"):
-        arrs = row_shingle_arrays(docs, mode=mode).persist()
-        pairs = _pairs_from_band_rows(_band_rows_from_arrays(arrs))
-        return jaccard_of_pairs_arrays(pairs, arrs).filter(
-            F.col("jaccard") >= threshold
-        )
-    shingles = doc_shingles(
-        doc_token_ids(
-            tokens_with_ids(
-                docs, deterministic_vocab=deterministic_vocab, vocab_mode=vocab_mode
-            )
-        )
-    ).persist()
-    pairs = lsh_candidate_pairs(minhash_signatures(shingles))
-    return jaccard_of_pairs(pairs, shingles).filter(F.col("jaccard") >= threshold)
+    arrs = row_shingle_arrays(docs).persist()
+    pairs = _pairs_from_band_rows(_band_rows_from_arrays(arrs))
+    return jaccard_of_pairs_arrays(pairs, arrs).filter(
+        F.col("jaccard") >= threshold
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -589,31 +522,16 @@ def minhash_lsh_dedup(
 # ---------------------------------------------------------------------------
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = C.NGRAM_JACCARD_THRESHOLD,
-    deterministic_vocab: bool = False,
-    max_df: int | None = None,
-    vocab_mode: str | None = None,
-) -> DataFrame:
-    """All pairs with exact shingle Jaccard >= threshold, generated
-    from the inverted shingle index (no LSH approximation, no cross
-    join). ``max_df`` prunes shingles appearing in more than that
-    many docs — the standard hot-key guard at scale (changes results;
-    off by default and in the oracle). The shingle index is persisted
-    (used by both join sides, the df-count prune, and the size
+def _shared_shingle_pairs(docs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_inter, sz_a, sz_b) for every pair sharing at
+    least one shingle, from the inverted shingle index: a pair is
+    enumerated once per SHARED shingle (never an all-pairs product)
+    and one group per pair counts the intersection.  The shingle
+    index is persisted (used by both join sides and the size
     lookup)."""
-    shingles = exploded_shingles(
-        docs, vocab_mode=vocab_mode, deterministic_vocab=deterministic_vocab
-    ).persist()
-    index = shingles
-    if max_df is not None:
-        df_counts = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        index = shingles.join(
-            df_counts.filter(F.col("df") <= max_df).select("shingle"), "shingle"
-        )
-    sa = index.select(F.col("doc_id").alias("doc_a"), "shingle")
-    sb = index.select(F.col("doc_id").alias("doc_b"), "shingle")
+    shingles = exploded_shingles(docs).persist()
+    sa = shingles.select(F.col("doc_id").alias("doc_a"), "shingle")
+    sb = shingles.select(F.col("doc_id").alias("doc_b"), "shingle")
     pairs = (
         sa.join(sb, "shingle")
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -621,9 +539,19 @@ def ngram_jaccard_pairs(
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    return pairs.join(
+        sizes.withColumnsRenamed({"doc_id": "doc_a", "sz": "sz_a"}), "doc_a"
+    ).join(sizes.withColumnsRenamed({"doc_id": "doc_b", "sz": "sz_b"}), "doc_b")
+
+
+def ngram_jaccard_pairs(
+    docs: DataFrame, threshold: float = C.NGRAM_JACCARD_THRESHOLD
+) -> DataFrame:
+    """All pairs with exact shingle Jaccard >= threshold, generated
+    from the inverted shingle index (no LSH approximation, no cross
+    join)."""
     return (
-        pairs.join(sizes.withColumnsRenamed({"doc_id": "doc_a", "sz": "sz_a"}), "doc_a")
-        .join(sizes.withColumnsRenamed({"doc_id": "doc_b", "sz": "sz_b"}), "doc_b")
+        _shared_shingle_pairs(docs)
         .withColumn(
             "jaccard",
             F.round(
@@ -637,11 +565,7 @@ def ngram_jaccard_pairs(
 
 
 def overlap_coefficient_pairs(
-    docs: DataFrame,
-    threshold: float = C.OVERLAP_COEFF_THRESHOLD,
-    deterministic_vocab: bool = False,
-    max_df: int | None = None,
-    vocab_mode: str | None = None,
+    docs: DataFrame, threshold: float = C.OVERLAP_COEFF_THRESHOLD
 ) -> DataFrame:
     """All pairs with shingle OVERLAP COEFFICIENT
     ``|A ∩ B| / min(|A|, |B|)`` >= threshold — the asymmetric
@@ -650,34 +574,12 @@ def overlap_coefficient_pairs(
     ~1.0 here while its symmetric Jaccard can be arbitrarily small
     (the union is dominated by the container).
 
-    Same scale shape as :func:`ngram_jaccard_pairs`: candidates come
-    from the inverted shingle index (a pair is enumerated once per
-    SHARED shingle — never an all-pairs product), then one group per
-    pair computes the intersection size; ``max_df`` is the hot-key
-    guard for stop-shingles.  The reference has no dedup operator at
-    all; this extends its text pipeline for corpus prep.
+    Same scale shape as :func:`ngram_jaccard_pairs` (shared inverted-
+    index pair count).  The reference has no dedup operator at all;
+    this extends its text pipeline for corpus prep.
     """
-    shingles = exploded_shingles(
-        docs, vocab_mode=vocab_mode, deterministic_vocab=deterministic_vocab
-    ).persist()
-    index = shingles
-    if max_df is not None:
-        df_counts = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        index = shingles.join(
-            df_counts.filter(F.col("df") <= max_df).select("shingle"), "shingle"
-        )
-    sa = index.select(F.col("doc_id").alias("doc_a"), "shingle")
-    sb = index.select(F.col("doc_id").alias("doc_b"), "shingle")
-    pairs = (
-        sa.join(sb, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     return (
-        pairs.join(sizes.withColumnsRenamed({"doc_id": "doc_a", "sz": "sz_a"}), "doc_a")
-        .join(sizes.withColumnsRenamed({"doc_id": "doc_b", "sz": "sz_b"}), "doc_b")
+        _shared_shingle_pairs(docs)
         .withColumn(
             "overlap",
             F.round(F.col("n_inter") / F.least("sz_a", "sz_b"), 4),
@@ -688,9 +590,7 @@ def overlap_coefficient_pairs(
 
 
 def prefix_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = C.NGRAM_JACCARD_THRESHOLD,
-    vocab_mode: str | None = None,
+    docs: DataFrame, threshold: float = C.NGRAM_JACCARD_THRESHOLD
 ) -> DataFrame:
     """PPJoin-style prefix-filtered all-pairs Jaccard join.
 
@@ -712,23 +612,12 @@ def prefix_jaccard_pairs(
     second groupBy + join back), one window rank keyed by doc_id (no
     global sort) over the df-joined prefix stream, the candidate
     self-join keyed on shingle over the pruned prefix only, exact
-    confirm from the persisted per-doc arrays (``rank`` encoding
-    keeps the legacy exploded chain).
+    confirm from the persisted per-doc arrays.
     """
-    mode = vocab_mode or "hash"
-    if mode in ("char", "hash"):
-        arrs = row_shingle_arrays(docs, mode=mode).persist()
-        shingles = arrs.select(
-            "doc_id", F.size("_sh").alias("sz"), F.explode("_sh").alias("shingle")
-        )
-        confirm = lambda cands: jaccard_of_pairs_arrays(cands, arrs)  # noqa: E731
-    else:
-        ex = doc_shingles(
-            doc_token_ids(tokens_with_ids(docs, vocab_mode=vocab_mode))
-        ).persist()
-        sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-        shingles = ex.join(sizes, "doc_id")
-        confirm = lambda cands: jaccard_of_pairs(cands, ex)  # noqa: E731
+    arrs = row_shingle_arrays(docs).persist()
+    shingles = arrs.select(
+        "doc_id", F.size("_sh").alias("sz"), F.explode("_sh").alias("shingle")
+    )
     dfc = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "shingle")
     ranked = shingles.join(dfc, "shingle").withColumn(
@@ -749,7 +638,7 @@ def prefix_jaccard_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    return confirm(cands).filter(F.col("jaccard") >= threshold)
+    return jaccard_of_pairs_arrays(cands, arrs).filter(F.col("jaccard") >= threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -1264,46 +1153,29 @@ def connected_components(
 
 
 def incremental_minhash_pairs(
-    base: DataFrame,
-    inserts: DataFrame,
+    arr_base: DataFrame,
+    arr_new: DataFrame,
     threshold: float = C.MINHASH_JACCARD_THRESHOLD,
-    vocab_mode: str = "char",
-    pre_arrayed: bool = False,
 ) -> DataFrame:
     """Incremental near-dup detection: (doc_base, doc_new, jaccard)
     pairs between a NEW batch of documents and the EXISTING corpus —
     the shape every continuously-crawling pipeline runs (dedup the
     delta against the index, never the corpus against itself).
 
-    Each side is shingled and banded independently, which is valid
-    only for pure-map token encodings (``char`` hashing) — a
-    corpus-dependent encoding (rank) would drift between batches.
-    The candidate join probes base bands with the (tiny) insert
-    bands, so the work scales with |delta| x bucket-hit-rate, not
-    |corpus|^2; in production the base's band table and shingle
-    index are precomputed tables written bucketed on their join keys
-    (``scale.layout.write_bucketed``), making the probe shuffle-free
-    on the corpus side.
+    Both inputs are per-doc shingle arrays (doc_id, _sh), the output
+    of :func:`row_shingle_arrays`; the caller owns any persist.  The
+    char encoding is pure-map, so arrays computed per batch, on a
+    shared source table, or read back from a stored corpus index are
+    all the same arrays.  The candidate join probes base bands with
+    the (tiny) insert bands, so the work scales with |delta| x
+    bucket-hit-rate, not |corpus|^2; the confirm intersects the
+    candidates' arrays (bounded by |candidates|, unlike a join of two
+    exploded indexes on the shingle key, where every boilerplate
+    shingle fans out across both corpora).  In production the base's
+    band table and shingle index are precomputed tables written
+    bucketed on their join keys (``scale.layout.write_bucketed``),
+    making the probe shuffle-free on the corpus side.
     """
-    if vocab_mode != "char":
-        raise ValueError("incremental mode requires a pure-map encoding")
-    # per-row shingle arrays (scan stage, no explode/groupBy): the
-    # legacy confirm joined the two exploded indexes ON THE SHINGLE
-    # KEY — a hot-key magnet (every boilerplate shingle fans out
-    # across both corpora); the candidate-restricted array intersect
-    # is bounded by |candidates| instead.
-    # ``pre_arrayed`` (r9, VERDICT r8 #5): when both batches derive
-    # from ONE source table, the caller tokenizes once —
-    # ``row_shingle_arrays(docs).persist()`` filtered into the two
-    # slots — instead of this function scanning and tokenizing the
-    # source twice.  Valid because the char encoding is pure-map
-    # (row-local), so arrays computed on the union equal arrays
-    # computed per batch.  The caller owns the persist in that case.
-    if pre_arrayed:
-        arr_base, arr_new = base, inserts
-    else:
-        arr_base = row_shingle_arrays(base).persist()
-        arr_new = row_shingle_arrays(inserts).persist()
     cand = (
         _band_rows_from_arrays(arr_base)
         .select(F.col("doc_id").alias("doc_base"), "band", "bucket")
@@ -1341,9 +1213,7 @@ def incremental_minhash_pairs(
     )
 
 
-def duplicated_spans(
-    docs: DataFrame, n: int = C.SHINGLE_N, vocab_mode: str = "char"
-) -> DataFrame:
+def duplicated_spans(docs: DataFrame, n: int = C.SHINGLE_N) -> DataFrame:
     """ExactSubstr-style duplicated-span report: a token position is
     *duplicated* if it is covered by a token ``n``-gram that occurs
     at least twice anywhere in the corpus (another document or another
@@ -1362,9 +1232,7 @@ def duplicated_spans(
     scale both it and the duplicate set would be precomputed bucketed
     tables (same index as ``incremental_minhash_pairs``).
     """
-    if vocab_mode != "char":
-        raise ValueError("duplicated_spans requires a pure-map encoding")
-    ids = doc_tids(docs, vocab_mode=vocab_mode).persist()
+    ids = doc_tids(docs).persist()
 
     def shingle_at(tids: Column, i: Column) -> Column:
         acc = F.element_at(tids, i).cast("long")
@@ -1431,9 +1299,7 @@ def duplicated_spans(
     )
 
 
-def minhash_estimate_audit(
-    docs: DataFrame, vocab_mode: str | None = None
-) -> DataFrame:
+def minhash_estimate_audit(docs: DataFrame) -> DataFrame:
     """Sketch-accuracy audit for MinHash: on every LSH candidate pair,
     the signature-agreement Jaccard estimate (matching minhash slots /
     8) next to the exact shingle Jaccard and their signed error —
@@ -1441,21 +1307,11 @@ def minhash_estimate_audit(
     the sketch pipeline's threshold at scale.  Deterministic (fixed
     permutation family), so fully oracle-checkable, unlike
     probabilistic-sketch audits."""
-    mode = vocab_mode or "hash"
-    if mode in ("char", "hash"):
-        # scan-stage path: signatures fold per row; the exploded
-        # index never shuffles (see minhash_lsh_dedup)
-        arrs = row_shingle_arrays(docs, mode=mode).persist()
-        sigs = row_minhash_signatures(arrs)
-        cand = _pairs_from_band_rows(_band_rows_from_arrays(arrs))
-        exact_src: DataFrame | None = None
-    else:
-        shingles = doc_shingles(
-            doc_token_ids(tokens_with_ids(docs, vocab_mode=vocab_mode))
-        ).persist()
-        sigs = minhash_signatures(shingles)
-        cand = lsh_candidate_pairs(sigs)
-        exact_src = shingles
+    # scan-stage path: signatures fold per row; the exploded index
+    # never shuffles (see minhash_lsh_dedup)
+    arrs = row_shingle_arrays(docs).persist()
+    sigs = row_minhash_signatures(arrs)
+    cand = _pairs_from_band_rows(_band_rows_from_arrays(arrs))
     n_h = len(C.MINHASH_COEFFS)
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"),
@@ -1474,11 +1330,7 @@ def minhash_estimate_audit(
         "doc_b",
         F.round(agree / F.lit(float(n_h)), 4).alias("jaccard_est"),
     )
-    exact = (
-        jaccard_of_pairs_arrays(cand, arrs)
-        if exact_src is None
-        else jaccard_of_pairs(cand, exact_src)
-    )
+    exact = jaccard_of_pairs_arrays(cand, arrs)
     return est.join(exact, ["doc_a", "doc_b"]).select(
         "doc_a",
         "doc_b",

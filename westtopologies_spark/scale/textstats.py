@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from . import constants as C
 from ..session import release_local_checkpoint
-from .dedup import doc_tids, doc_token_ids, tokens_with_ids
+from .dedup import doc_tids
 
 
 def quality_scores(docs: DataFrame) -> DataFrame:
@@ -87,11 +87,7 @@ def token_counts(docs: DataFrame) -> DataFrame:
     )
 
 
-def fingerprints(
-    docs: DataFrame,
-    deterministic_vocab: bool = False,
-    vocab_mode: str | None = None,
-) -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, fingerprint): order-sensitive rolling polynomial hash
     over the dictionary-encoded token stream:
 
@@ -99,16 +95,10 @@ def fingerprints(
 
     Detects exact sequence matches (and is the building block for
     content-defined chunk fingerprints). Left fold == DuckDB
-    list_reduce with a prepended 0 seed."""
-    mode = vocab_mode or ("rank" if deterministic_vocab else "hash")
-    if mode in ("char", "hash"):
-        # r8: tid is a pure per-row function in these encodings — the
-        # array forms in the scan stage (doc_tids), no explode/groupBy
-        ids = doc_tids(docs, vocab_mode=mode)
-    else:
-        ids = doc_token_ids(
-            tokens_with_ids(docs, vocab_mode=mode)
-        )
+    list_reduce with a prepended 0 seed.  Token ids are the char hash
+    (a pure per-row function), so the id arrays form in the scan
+    stage (:func:`doc_tids`), with no explode or groupBy."""
+    ids = doc_tids(docs)
     fp = F.aggregate(
         F.col("tids"),
         F.lit(0).cast("long"),

@@ -257,9 +257,7 @@ def group_sample(
     )
 
 
-def contamination_rates(
-    train: DataFrame, eval_docs: DataFrame, vocab_mode: str = "char"
-) -> DataFrame:
+def contamination_rates(train: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Eval-set contamination report: for each eval document, the
     fraction of its token n-gram shingles that also appear anywhere
     in the training corpus — the standard n-gram decontamination
@@ -273,15 +271,13 @@ def contamination_rates(
     of the delta, same shape as incremental dedup."""
     from .dedup import exploded_shingles
 
-    if vocab_mode != "char":
-        raise ValueError("contamination requires a pure-map encoding")
     train_set = (
-        exploded_shingles(train, vocab_mode=vocab_mode)
+        exploded_shingles(train)
         .select("shingle")
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
-    eval_sh = exploded_shingles(eval_docs, vocab_mode=vocab_mode)
+    eval_sh = exploded_shingles(eval_docs)
     return (
         eval_sh.join(train_set, "shingle", "left")
         .groupBy("doc_id")

@@ -94,7 +94,6 @@ def data_driven_windows(
     interval_sec: int = 600,
     key_cols: list[str] | None = None,
     mode: str = "auto",
-    distributed_min_rows: int = W1_DISTRIBUTED_MIN_ROWS,
 ) -> DataFrame:
     """W1 exact semantics, batch mode.
 
@@ -111,7 +110,7 @@ def data_driven_windows(
       per-block record-high scans + pointer-doubling, fully
       executor-parallel (the 100 TB path);
     - ``"auto"`` (default): ``df.count()`` (metadata-cheap on parquet)
-      against ``distributed_min_rows`` decides.
+      against :data:`W1_DISTRIBUTED_MIN_ROWS` decides.
     """
     keys = list(key_cols or [])
     cols = [ts_col, value_col, seq_col] + keys
@@ -120,7 +119,7 @@ def data_driven_windows(
 
     if not keys and mode != "scan":
         if mode == "distributed" or (
-            mode == "auto" and df.count() >= distributed_min_rows
+            mode == "auto" and df.count() >= W1_DISTRIBUTED_MIN_ROWS
         ):
             return data_driven_windows_distributed(
                 df, ts_col, value_col, seq_col, interval_sec
@@ -774,13 +773,11 @@ def lsh_candidate_stream(
 
     ``bucket_cap`` bounds per-bucket state: once a bucket has seen
     that many documents, later arrivals still emit candidates against
-    the capped posting list but are not appended — the streaming
-    analogue of the batch path's hot-shingle ``max_df`` pruning (a
-    bucket hot enough to overflow the cap is a boilerplate/templated
-    signature whose pairs are already saturated).  Downstream
-    consumers confirm candidates with exact Jaccard
-    (``jaccard_of_pairs``) in a batch job over the emitted pairs,
-    micro-batch by micro-batch.
+    the capped posting list but are not appended (a bucket hot
+    enough to overflow the cap is a boilerplate/templated signature
+    whose pairs are already saturated).  Downstream consumers confirm
+    candidates with exact Jaccard (``jaccard_of_pairs_arrays``) in a
+    batch job over the emitted pairs, micro-batch by micro-batch.
 
     Within a micro-batch rows are processed in doc_id order (the
     arrival-order analog, FIXTURES.md `_seq`); a parity test pins the
