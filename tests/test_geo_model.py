@@ -3,7 +3,7 @@ model-scoring kernel (ops/model.py) on tiny in-memory frames."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import numpy as np
 
 from westtopologies_spark.ops.geo import (
     GEO_LAT,
@@ -99,31 +99,31 @@ def test_predict_locations_deterministic_topk(spark):
 
 
 def test_predict_vectorized_matches_grouped(spark):
-    """M1 vectorized (mapInPandas) == grouped (applyInPandas) scorer."""
-    from westtopologies_spark.ops.model import predict_locations_vectorized
-
+    """M1: the vectorized scorer equals the per-doc grouped formula —
+    theta = pi * geometric-mean(topic_word[:, ids]), normalized; region
+    probabilities = normalized region_topic @ theta; top-k by
+    probability — computed here in plain NumPy, one doc at a time."""
     model = LocationModel.deterministic(n_regions=12)
-    docs = spark.createDataFrame(
-        [(0, "1 2 3"), (1, "4 4 4 9"), (2, ""), (3, "7")],
-        ["doc_id", "token_ids"],
-    )
-    a = {
-        (r["doc_id"], r["rank_i"]): (r["location"], round(r["probability"], 9))
-        for r in predict_locations(docs, model, top_k=3)
-        .withColumn("rank_i", F.row_number().over(
-            __import__("pyspark.sql.window", fromlist=["Window"]).Window
-            .partitionBy("doc_id").orderBy(F.desc("probability"), "location")))
-        .collect()
+    tw, pi, rt, regions = model.topic_word, model.pi_0, model.region_topic, model.regions
+    rows = [(0, "1 2 3"), (1, "4 4 4 9"), (2, ""), (3, "7"), (4, "600 3")]
+    expect = set()
+    for doc_id, token_ids in rows:
+        ids = [int(t) % tw.shape[1] for t in token_ids.split()]
+        theta = pi * np.prod(tw[:, ids] + 1e-12, axis=1) ** (1.0 / len(ids)) if ids else pi.copy()
+        region_scores = rt @ (theta / theta.sum())
+        region_probs = region_scores / region_scores.sum()
+        for r in np.argsort(-region_probs)[:3]:
+            lat, lon = regions[r]
+            expect.add((doc_id, f"{np.float32(lon)},{np.float32(lat)}", round(float(region_probs[r]), 9)))
+
+    docs = spark.createDataFrame(rows, ["doc_id", "token_ids"])
+    got = {
+        (r["doc_id"], r["location"], round(r["probability"], 9))
+        for r in predict_locations(docs, model, top_k=3).collect()
     }
-    b = {
-        (r["doc_id"], r["rank_i"]): (r["location"], round(r["probability"], 9))
-        for r in predict_locations_vectorized(docs, model, top_k=3)
-        .withColumn("rank_i", F.row_number().over(
-            __import__("pyspark.sql.window", fromlist=["Window"]).Window
-            .partitionBy("doc_id").orderBy(F.desc("probability"), "location")))
-        .collect()
-    }
-    assert a == b
+    assert got == expect
+    # top_k above the region count emits every region once
+    assert predict_locations(docs, model, top_k=20).count() == len(rows) * 12
 
 
 def test_live_lookup_parity_snapshot_vs_live(spark):

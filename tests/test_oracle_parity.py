@@ -46,3 +46,37 @@ def test_query_matches_oracle(spec, spark, duck, sf_dir):
     assert s_cols == d_cols
     assert len(s_rows) == len(d_rows)
     assert s_rows == d_rows
+
+
+def test_stem_rule_boundaries_match_oracle(spark):
+    """X4: every stemming rule at, below and above its min-stem length
+    (plus rule chains and case folding) equals the ``x4_stem_rule_based``
+    oracle's CASE chain run by DuckDB on the same tokens."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from westtopologies_spark.ops.text import stem_rule_based
+
+    suffixes = ["ies", "sses", "s", "ss", "us", "is", "as", "ing", "ed", "ings", "eds", "ied"]
+    words = sorted(
+        {
+            case(prefix[:n] + suffix)
+            for prefix in ("abcdefg", "xxxxxxx", "àbçdéfg")
+            for suffix in suffixes
+            for n in range(0, 8)
+            for case in (str.lower, str.upper)
+        }
+    )
+    oracle = next(s.oracle for s in catalog() if s.name == "x4_stem_rule_based")
+    with duckdb.connect() as con:
+        con.execute("CREATE TABLE documents AS SELECT ? AS text", [" ".join(words)])
+        expect = dict(con.sql(oracle).fetchall())
+    toks = spark.createDataFrame([(w,) for w in words], "token string")
+    got = {
+        r["token"]: r["stem"]
+        for r in toks.select("token", stem_rule_based(F.col("token")).alias("stem"))
+        .filter(F.length("token") > 1)
+        .collect()
+    }
+    assert len(got) > 400
+    assert got == expect

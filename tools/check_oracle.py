@@ -128,6 +128,10 @@ def main() -> int:
 
     spark = get_spark("oracle-check")
 
+    host_mem_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    duck_mem_gb = max(1, min(48, host_mem_gb // 2))
+    duck_threads = min(16, os.cpu_count() or 1)
+
     def fresh_con():
         # ONE CONNECTION PER ORACLE — not an optimization knob, a
         # correctness requirement for the suite: DuckDB's recursive-
@@ -142,18 +146,16 @@ def main() -> int:
         # setup cost is milliseconds (views are lazy).
         c = duckdb.connect()
         # the heavy recursive replays (dd_soft_weights & co at sf0.1)
-        # have a ~24 GB, scheduling-dependent transient peak in hash
-        # operators that CANNOT spill — at a 24 GB cap they died
-        # nondeterministically with 'Failed to allocate block' (and
-        # DuckDB's post-OOM cleanup then SEGFAULTS the process, which
-        # is why three gate runs ended abruptly at the same query).
-        # The host has 125 GB and Spark holds <= ~20, so give DuckDB
-        # real headroom, a spill path for the operators that can use
-        # one, and a bounded thread count (hash-op memory scales with
-        # threads).
-        c.execute("SET memory_limit='48GB'")
+        # have a scheduling-dependent transient peak in hash operators
+        # that CANNOT spill — too tight a cap kills them with 'Failed
+        # to allocate block' (and DuckDB's post-OOM cleanup then
+        # SEGFAULTS the process).  Give DuckDB half the host's memory
+        # (the other half is Spark's), a spill path for the operators
+        # that can use one, and one thread per core (hash-op memory
+        # scales with threads), capped at 48 GB / 16 threads.
+        c.execute(f"SET memory_limit='{duck_mem_gb}GB'")
         c.execute("SET temp_directory='/tmp/duckdb_spill'")
-        c.execute("SET threads=16")
+        c.execute(f"SET threads={duck_threads}")
         for t in TABLES:
             c.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"

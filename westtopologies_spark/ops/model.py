@@ -1,28 +1,24 @@
-"""Model scoring / training kernels (SURVEY.md §2.9).
+"""Location scoring kernels (SURVEY.md §2.9).
 
-M1 — the reference's location predictor is a Gibbs-style sampler over
-matrices loaded from whitespace files, invoked per 5-message batch
-(TopicModelBolt.java:87-99,168; bytecode jgibblda.PredictLocation#predict;
-geographic topic model with von-Mises-Fisher region densities per
-Kling et al., WSDM 2014). Spark mapping: the matrices are a driver-
-side numpy bundle broadcast into an ``applyInPandas`` over batch
-groups — Arrow-vectorized, executor-parallel, seeded for tests.
+M1 — the reference's location predictor scores each 5-message batch
+against every region of a geographic topic model (TopicModelBolt.java
+:87-99,168; bytecode jgibblda.PredictLocation#predict; von-Mises-
+Fisher region densities per Kling et al., WSDM 2014) and publishes
+the top 5. The reference samples with an unseeded Gibbs chain; this
+engine scores the deterministic collapsed estimate (expected topic
+mixture x region density) instead, so the same inputs always give the
+same output. Batching never changes a document's score, so the
+5-message buffer (W2) is not part of the scorer.
 
-Two scoring tiers:
+One scorer, one oracle:
 
-* :func:`predict_locations` / :func:`predict_locations_vectorized` —
-  deterministic collapsed estimate (expected topic mixture x region
-  density): same inputs, same matrices, same output shape,
-  reproducible, oracle-benchable. The throughput path.
-* :func:`predict_locations_gibbs` — the fixture tier (VERDICT r1
-  item 5): a seeded numpy mirror of the reference's actual
-  ``jgibblda.PredictLocation#predict`` chain, iteration structure
-  recovered instruction-by-instruction from bytecode (RUNS=10
-  sweeps, (K+1)-component weights with background mass pi0[K]/V,
-  cumulative-sum inverse draw, k=1..K region scoring, toSpherical
-  output quirks). The unseeded ``Math.random`` is the only thing
-  replaced — per-batch seeded Generators make it fixture-pinnable
-  and partition-invariant (SURVEY.md §7.3).
+* :func:`predict_locations` — the NumPy scorer: the model matrices
+  are broadcast and each Arrow batch is scored in one ``mapInPandas``
+  call (segment-summed log-likelihoods, one GEMM, top-k). Used by the
+  location pipeline and by ``m1_predict_locations``.
+* :func:`predict_regions_fixedpoint` / :func:`predict_regions_fixedpoint_sql`
+  — the same estimate restructured so Spark and DuckDB execute
+  bit-identical arithmetic; carries ``m1_region_topk``'s oracle.
 """
 
 from __future__ import annotations
@@ -65,78 +61,23 @@ def predict_locations(
     model: LocationModel,
     doc_col: str = "doc_id",
     token_ids_col: str = "token_ids",
-    batch_size: int = 5,
     top_k: int = 5,
 ) -> DataFrame:
-    """M1 + W2 + T1 — batch the docs (floor(id/batch_size), the
-    deterministic analog of the reference's 5-message buffer), score
-    each doc against every region, emit top-k (location, probability)
-    pairs with the reference's "lon,lat" float key (P10).
+    """M1 + T1 — score each doc against every region and emit its
+    top-k (location, probability) pairs with the reference's "lon,lat"
+    float key (P10).
 
-    ``token_ids`` is a space-separated id string (X5 output / E4).
+    ``token_ids`` is a space-separated id string (X5 output / E4); an
+    empty doc scores with the topic prior alone. ``doc_col`` passes
+    through with its input type. One Python call per Arrow batch,
+    fully vectorized: segment-summed log-likelihoods give each doc's
+    topic mixture and one GEMM gives every region score.
     """
     spark = docs.sparkSession
     bc = spark.sparkContext.broadcast(
         (model.topic_word, model.pi_0, model.region_topic, model.regions)
     )
-
-    batched = docs.withColumn("_batch", F.floor(F.col(doc_col) / batch_size))
-
-    def score(pdf):
-        import pandas as pd
-
-        tw, pi, rt, regions = bc.value
-        vocab = tw.shape[1]
-        out_rows = []
-        for _, row in pdf.iterrows():
-            ids = [int(t) % vocab for t in str(row[token_ids_col]).split() if t.strip()]
-            if ids:
-                # expected topic mixture given tokens (collapsed, no sampling)
-                theta = pi * np.prod(tw[:, ids] + 1e-12, axis=1) ** (1.0 / len(ids))
-            else:
-                theta = pi.copy()
-            theta /= theta.sum()
-            region_scores = rt @ theta
-            region_probs = region_scores / region_scores.sum()
-            top = np.argsort(-region_probs)[:top_k]
-            for r in top:
-                lat, lon = regions[r]
-                out_rows.append(
-                    {
-                        doc_col: row[doc_col],
-                        "location": f"{np.float32(lon)},{np.float32(lat)}",
-                        "probability": float(region_probs[r]),
-                    }
-                )
-        return pd.DataFrame(
-            out_rows, columns=[doc_col, "location", "probability"]
-        )
-
-    return batched.groupBy("_batch").applyInPandas(
-        score, schema=f"{doc_col} long, location string, probability double"
-    )
-
-
-def predict_locations_vectorized(
-    docs: DataFrame,
-    model: LocationModel,
-    doc_col: str = "doc_id",
-    token_ids_col: str = "token_ids",
-    top_k: int = 5,
-) -> DataFrame:
-    """M1, Arrow-throughput variant: identical per-doc output to
-    :func:`predict_locations` (same collapsed estimate, same top-k,
-    same 'lon,lat' keys) computed via ``mapInPandas`` — ONE Python
-    call per Arrow batch with fully vectorized numpy (segment-summed
-    log-likelihoods, one GEMM for region scores) instead of one
-    pandas group per 5-doc buffer. Use this when scoring a large
-    corpus; the grouped variant remains the W2-shaped streaming
-    analog. ~10**2 fewer Python crossings on a 50k-doc table.
-    """
-    spark = docs.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (model.topic_word, model.pi_0, model.region_topic, model.regions)
-    )
+    doc_type = docs.schema[doc_col].dataType.simpleString()
 
     def score(batches):
         import pandas as pd
@@ -169,10 +110,10 @@ def predict_locations_vectorized(
             region_scores = rt @ theta  # L x D
             region_probs = region_scores / region_scores.sum(axis=0, keepdims=True)
             top = np.argsort(-region_probs, axis=0)[:top_k]  # k x D
-            doc_ids = pdf[doc_col].to_numpy()
-            out_doc = np.repeat(doc_ids, top_k)
+            k = top.shape[0]  # top_k, or L when the model has fewer regions
+            out_doc = np.repeat(pdf[doc_col].to_numpy(), k)
             flat_top = top.T.ravel()
-            probs = region_probs[flat_top, np.repeat(np.arange(D), top_k)]
+            probs = region_probs[flat_top, np.repeat(np.arange(D), k)]
             lat = regions[flat_top, 0].astype(np.float32)
             lon = regions[flat_top, 1].astype(np.float32)
             yield pd.DataFrame(
@@ -184,175 +125,7 @@ def predict_locations_vectorized(
             )
 
     return docs.select(doc_col, token_ids_col).mapInPandas(
-        score, schema=f"{doc_col} long, location string, probability double"
-    )
-
-
-# ---------------------------------------------------------------------------
-# M1 seeded-Gibbs fixture mode (VERDICT r1 item 5)
-# ---------------------------------------------------------------------------
-
-
-@dataclass
-class ReferenceLocationModel:
-    """The exact matrix bundle ``jgibblda.PredictLocation#predict``
-    loads from whitespace files (bytecode: Load.readFile1/2 calls in
-    the method prologue): ``topic_word`` [K x V], ``pi_0Alpha``
-    [K+1] (K topic weights + background mass), ``qm`` [L x 3]
-    (cartesian region centers), ``pisetasum`` [L x (K+1)] (region
-    Dirichlet parameters)."""
-
-    topic_word: np.ndarray
-    pi_0_alpha: np.ndarray
-    qm: np.ndarray
-    pisetasum: np.ndarray
-
-    @classmethod
-    def deterministic(
-        cls, n_topics: int = 8, vocab: int = 512, n_regions: int = 16, seed: int = 42
-    ) -> "ReferenceLocationModel":
-        rng = np.random.default_rng(seed)
-        tw = rng.dirichlet(np.ones(vocab), size=n_topics)
-        pi = rng.uniform(0.1, 2.0, n_topics + 1)
-        # unit-sphere region centers (qm rows are x,y,z)
-        v = rng.normal(size=(n_regions, 3))
-        qm = v / np.linalg.norm(v, axis=1, keepdims=True)
-        pisetasum = rng.uniform(0.5, 3.0, (n_regions, n_topics + 1))
-        return cls(tw, pi, qm, pisetasum)
-
-
-def to_spherical(x: float, y: float, z: float) -> tuple[float, float]:
-    """Mirror of ``ckling.geo.Coordinates.toSpherical(DDD)`` including
-    its quirky offsets: lat = deg(acos(z)) - 90, lon = deg(atan2(y,x))
-    then +180 if negative else -180 (bytecode-verified)."""
-    s0 = math.degrees(math.acos(z)) - 90.0
-    s1 = math.degrees(math.atan2(y, x))
-    s1 = s1 + 180.0 if s1 < 0 else s1 - 180.0
-    return s0, s1
-
-
-def gibbs_predict(
-    docs_tokens: list[list[int]],
-    model: ReferenceLocationModel,
-    rng: np.random.Generator,
-    runs: int = 10,
-) -> np.ndarray:
-    """Seeded mirror of ``jgibblda.PredictLocation#predict``'s chain
-    (bytecode-verified loop structure; ``RUNS=10`` from the static
-    initializer). Returns the D x L per-doc region probabilities.
-
-    Iteration structure, identical to the reference:
-
-    * z[d][j] initialised to -1; D x (K+1) count matrix;
-    * ``runs`` full sweeps over (doc, token): decrement the old
-      assignment's count (if any), weights
-      ``p[k] = (pi0[k]+n[d][k]) * topic_word[k][w]`` for k<K and
-      ``p[K] = pi0[K]/V``, one uniform draw against the cumulative
-      sum (first k with cumsum >= u), reassign, increment;
-    * region score ``fgamma(sum(pisetasum[l])) * prod_{k=1..K}
-      fgamma(pisetasum[l][k]) * ((n[d][k]+pi0[k])/(nd+pisum))**
-      (pisetasum[l][k]-1)`` — note k starts at 1, skipping the
-      background component, exactly like the bytecode — normalised
-      per doc.
-
-    The only divergences from the jar: the RNG is a seeded numpy
-    Generator instead of unseeded ``Math.random`` (the whole point of
-    fixture mode), and the region score is accumulated in log space
-    (``fgamma(x) = exp(lgamma(x))`` in the reference; the product of
-    exps is the exp of the sum — same value, no overflow).
-    """
-    K, V = model.topic_word.shape
-    pi0 = model.pi_0_alpha
-    pisum = float(pi0.sum())
-    D = len(docs_tokens)
-    L = model.pisetasum.shape[0]
-    n = np.zeros((D, K + 1), dtype=np.int64)
-    z = [np.full(len(doc), -1, dtype=np.int64) for doc in docs_tokens]
-
-    for _ in range(runs):
-        for d, doc in enumerate(docs_tokens):
-            for j, w in enumerate(doc):
-                if z[d][j] >= 0:
-                    n[d][z[d][j]] -= 1
-                p = np.empty(K + 1)
-                np.multiply(pi0[:K] + n[d][:K], model.topic_word[:, w], out=p[:K])
-                p[K] = pi0[K] * 1.0 / V
-                cp = np.cumsum(p)
-                u = rng.random() * cp[K]
-                k = int(np.searchsorted(cp, u, side="left"))
-                z[d][j] = k
-                n[d][k] += 1
-
-    # region scoring (log-space accumulation of the reference product)
-    lg = np.vectorize(math.lgamma)
-    base = lg(model.pisetasum.sum(axis=1)) + lg(model.pisetasum[:, 1:]).sum(axis=1)  # L
-    res = np.empty((D, L))
-    for d in range(D):
-        nd = float(n[d].sum())
-        ratio = (n[d][1:] + pi0[1:]) / (nd + pisum)  # K
-        logs = base + ((model.pisetasum[:, 1:] - 1.0) * np.log(ratio)[None, :]).sum(axis=1)
-        e = np.exp(logs - logs.max())
-        res[d] = e / e.sum()
-    return res
-
-
-def predict_locations_gibbs(
-    docs: DataFrame,
-    model: ReferenceLocationModel,
-    doc_col: str = "doc_id",
-    token_ids_col: str = "token_ids",
-    batch_size: int = 5,
-    top_k: int = 5,
-    seed: int = 42,
-    runs: int = 10,
-) -> DataFrame:
-    """M1 fixture mode — the seeded Gibbs chain per 5-doc batch
-    (TopicModelBolt.java:87-99 buffer, :174-196 top-k parse), output
-    shape identical to :func:`predict_locations`.
-
-    Determinism: docs are batched by ``floor(doc_id/batch_size)`` and
-    sorted inside the batch; each batch derives its RNG from
-    ``(seed, batch_id)`` — results are independent of partitioning
-    and cluster size.
-    """
-    spark = docs.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (model.topic_word, model.pi_0_alpha, model.qm, model.pisetasum)
-    )
-    batched = docs.withColumn("_batch", F.floor(F.col(doc_col) / batch_size))
-
-    def score(key, pdf):
-        import pandas as pd
-
-        tw, pi0, qm, pis = bc.value
-        m = ReferenceLocationModel(tw, pi0, qm, pis)
-        vocab = tw.shape[1]
-        rng = np.random.default_rng(
-            np.random.SeedSequence([seed, int(key[0]) & 0x7FFFFFFF])
-        )
-        pdf = pdf.sort_values(doc_col)
-        docs_tokens = [
-            [int(t) % vocab for t in str(s).split() if t.strip()]
-            for s in pdf[token_ids_col]
-        ]
-        res = gibbs_predict(docs_tokens, m, rng, runs=runs)
-        locs = [to_spherical(*row) for row in qm]
-        out = []
-        for i, doc_id in enumerate(pdf[doc_col].to_numpy()):
-            top = np.argsort(-res[i])[:top_k]
-            for r in top:
-                lat, lon = locs[r]
-                out.append(
-                    {
-                        doc_col: doc_id,
-                        "location": f"{np.float32(lon)},{np.float32(lat)}",
-                        "probability": float(res[i][r]),
-                    }
-                )
-        return pd.DataFrame(out, columns=[doc_col, "location", "probability"])
-
-    return batched.groupBy("_batch").applyInPandas(
-        score, schema=f"{doc_col} long, location string, probability double"
+        score, schema=f"{doc_col} {doc_type}, location string, probability double"
     )
 
 

@@ -3,9 +3,10 @@
 The reference's text pipeline (locationTopicModelTopology):
 language-detect -> tokenize -> stem -> dictionary-encode
 (TweetIndexBolt.java:143-192). Everything here stays JVM-side
-(regexp/broadcast-join built-ins) except Snowball stemming, which
-offers a pandas-UDF path behind an import-try with a deterministic
-rule-based fallback that is also SQL-expressible (oracle-checkable).
+(regexp/broadcast-join built-ins); stemming is a deterministic
+rule-based suffix stripper that is also SQL-expressible
+(oracle-checkable). The reference's Snowball stemmer lives in the
+reference-fidelity tier, :mod:`.text_reference`.
 """
 
 from __future__ import annotations
@@ -63,22 +64,34 @@ def drop_short_tokens(tokens: Column, min_len: int = 2) -> Column:
     return F.filter(tokens, lambda t: F.length(t) >= min_len)
 
 
+# X4 rules, applied in order: (anchored pattern, replacement). Each
+# pattern carries its own min-stem-length guard, so a rule is ONE
+# regexp_replace that references its input once — the expression
+# stays linear in the number of rules (a when(rlike)/otherwise chain
+# re-references the token per rule and grows geometrically).
+# ``(?<![sui])`` keeps the plural rule off -ss/-us/-is endings without
+# widening ``.`` to line terminators, which ``[^sui]`` would match.
+STEM_RULES = (
+    (r"^(.{4,})ies$", "$1y"),
+    (r"^(.{4,})sses$", "$1ss"),
+    (r"^(.{3,}(?<![sui]))s$", "$1"),
+    (r"^(.{5,})ing$", "$1"),
+    (r"^(.{5,})ed$", "$1"),
+)
+
+
 def stem_rule_based(token: Column) -> Column:
-    """X4 (deterministic fallback) — suffix-stripping stemmer in pure
-    SQL expressions: plural/-ing/-ed with a min-stem-length guard.
+    """X4 — suffix-stripping stemmer in pure SQL expressions:
+    plural/-ing/-ed with a min-stem-length guard (:data:`STEM_RULES`).
 
     The reference uses the Snowball (tartarus) stemmer [bytecode:
-    ckling.text.Text]; this rule-based variant exists so the stemming
-    stage has an exact cross-engine oracle.
+    ckling.text.Text], reproduced in :mod:`.text_reference`; this
+    rule-based variant exists so the stemming stage has an exact
+    cross-engine oracle.
     """
     t = F.lower(token)
-    t = F.when(t.rlike("^.{4,}ies$"), F.regexp_replace(t, "ies$", "y")).otherwise(t)
-    t = F.when(t.rlike("^.{4,}sses$"), F.regexp_replace(t, "sses$", "ss")).otherwise(t)
-    t = F.when(
-        t.rlike("^.{3,}s$") & ~t.rlike("(ss|us|is)$"), F.regexp_replace(t, "s$", "")
-    ).otherwise(t)
-    t = F.when(t.rlike("^.{5,}ing$"), F.regexp_replace(t, "ing$", "")).otherwise(t)
-    t = F.when(t.rlike("^.{5,}ed$"), F.regexp_replace(t, "ed$", "")).otherwise(t)
+    for pattern, replacement in STEM_RULES:
+        t = F.regexp_replace(t, pattern, replacement)
     return t
 
 

@@ -3,9 +3,11 @@
 Reference wiring: AMQP spout -> TweetIndexBolt -> TopicModelBolt ->
 RabbitMQ sink (locationTopicModelTopology/.../TopologyRunner.java:276-289).
 Per message: delete/text filters (P1/P2) -> language gate (X1) ->
-tokenize+stem (X2/X4) -> dictionary encode (J4/X5) -> batch-of-5
-(W2) -> predict (M1) -> top-5 locations (T1) -> project (P7/P10) ->
-publish (S5).
+tokenize+stem (X2/X4) -> dictionary encode (J4/X5) -> predict (M1)
+-> top-5 locations (T1) -> project (P7/P10) -> publish (S5). The
+reference's batch-of-5 buffer (W2) never changes a tweet's scores, so
+the batch flow scores every tweet in one Arrow pass; the cross-batch
+buffer itself is ``streaming.stateful.count_batches_stream``.
 """
 
 from __future__ import annotations
@@ -29,7 +31,6 @@ def location_topic_model_batch(
     tweets: DataFrame,
     model: LocationModel,
     dictionary: DataFrame | None = None,
-    batch_size: int = 5,
     top_k: int = 5,
     reference_fidelity: bool = False,
 ) -> DataFrame:
@@ -67,18 +68,10 @@ def location_topic_model_batch(
         ).withColumn("token", stem_rule_based(F.col("raw_token")))
     if dictionary is None:
         dictionary = build_dictionary(exploded)
-    encoded = (
-        encode_terms(exploded, dictionary, id_col="item_id")
-        .withColumn("doc_id", F.abs(F.hash("item_id")).cast("long"))
-    )
-    preds = predict_locations(
-        encoded, model, doc_col="doc_id", batch_size=batch_size, top_k=top_k
-    )
-    keyed = preds.join(
-        encoded.select("doc_id", "item_id"), "doc_id"
-    )
+    encoded = encode_terms(exploded, dictionary, id_col="item_id")
+    preds = predict_locations(encoded, model, doc_col="item_id", top_k=top_k)
     return (
-        keyed.groupBy(F.col("item_id").alias("itinno:item_id"))
+        preds.groupBy(F.col("item_id").alias("itinno:item_id"))
         .agg(
             F.reverse(
                 F.array_sort(

@@ -919,8 +919,9 @@ def x3_stopword_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
                               THEN regexp_replace(t, 'ed$', '') ELSE t END AS t FROM s4)
     SELECT token, t AS stem FROM s5 WHERE length(token) > 1
     """,
-    doc="X4 stemming — deterministic rule-based mode (oracle-checkable); "
-    "Snowball pandas-UDF mode available when the library is present. "
+    doc="X4 stemming — deterministic rule-based suffix stripper, one "
+    "anchored regexp_replace per rule (oracle-checkable). The Snowball "
+    "stemmer of the reference-fidelity tier is ops.text_reference. "
     "Reference: ckling.text.Text snowball field [bytecode].",
 )
 def x4_stem_rule_based(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1162,21 +1163,22 @@ def m3_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# M1: location prediction kernel (applyInPandas; rows-only check)
+# M1: location prediction kernel (mapInPandas; rows-only check)
 # ---------------------------------------------------------------------------
 
 
 @_register(
     "m1_predict_locations",
-    None,  # Gibbs-family model kernel: not SQL-expressible; rows-only gate
-    doc="M1 batch location prediction: X5-encoded docs -> Arrow-vectorized "
-    "mapInPandas scorer (broadcast model matrices), top-5 regions per doc "
-    "(T1) with 'lon,lat' float keys (P10). Deterministic collapsed "
-    "scoring; the 5-doc-buffer (W2) applyInPandas variant is "
-    "ops.model.predict_locations. Reference: TopicModelBolt.java:87-99,168.",
+    None,  # NumPy/BLAS fold order is not SQL-replayable; rows-only gate
+    doc="M1 batch location prediction: X5-encoded docs -> "
+    "ops.model.predict_locations, the engine's one NumPy scorer (broadcast "
+    "model matrices, one mapInPandas pass), top-5 regions per doc (T1) "
+    "with 'lon,lat' float keys (P10). Deterministic collapsed scoring; "
+    "the location pipeline runs the same scorer. Reference: "
+    "TopicModelBolt.java:87-99,168.",
 )
 def m1_predict_locations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.model import LocationModel, predict_locations_vectorized
+    from .ops.model import LocationModel, predict_locations
     from .ops.text import build_dictionary, encode_terms
 
     docs = _t(spark, sf_dir, "documents")
@@ -1186,7 +1188,7 @@ def m1_predict_locations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     encoded = encode_terms(toks, build_dictionary(toks))
     model = LocationModel.deterministic()
-    return predict_locations_vectorized(encoded, model)
+    return predict_locations(encoded, model)
 
 
 def _m1q_sql() -> str:
