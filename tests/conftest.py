@@ -10,10 +10,11 @@ sys.path.insert(0, REPO)
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
 
-# The engine's 16g default driver heap lets one session-long test JVM
-# grow to ~15 GB RSS over the default tier (measured on a 16 GB host,
-# where the kernel OOM-killed it mid-suite).  The smoke data needs a
-# small fraction of that; an explicit SPARK_GRAFT_DRIVER_MEM still wins.
+# A 16g driver heap let one session-long test JVM grow to ~15 GB RSS
+# over the default tier (measured on a 16 GB host, where the kernel
+# OOM-killed it mid-suite); the engine's default is now half the host,
+# which is still more than the smoke data needs.  An explicit
+# SPARK_GRAFT_DRIVER_MEM still wins.
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 

@@ -30,8 +30,12 @@ def test_query_matches_oracle(spec, spark, duck, sf_dir):
     sys.path.insert(0, __file__.rsplit("/tests/", 1)[0])
     from tools.type_audit import norm as _norm_strict
 
+    # a kernel owns its caching: no cached plan outlives the entry
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached = cache.numCachedEntries()
     sdf = spec.spark(spark, sf_dir)
     s_cols, s_rows = _rowset(sdf.columns, [tuple(r) for r in sdf.collect()])
+    assert cache.numCachedEntries() == cached
     if spec.oracle is None:
         assert isinstance(s_rows, list)  # rows-only smoke
         return

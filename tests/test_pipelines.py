@@ -142,8 +142,15 @@ def test_lod_explorer_batch(spark):
 
 
 def test_location_topic_model_batch(tweets):
-    out = location_topic_model_batch(tweets, LocationModel.deterministic(n_regions=8), top_k=5)
+    # dictionary=None derives the wordmap from the corpus; the run must
+    # leave no cached plan behind in the session
+    cache = tweets.sparkSession._jsparkSession.sharedState().cacheManager()
+    cached = cache.numCachedEntries()
+    out = location_topic_model_batch(
+        tweets, LocationModel.deterministic(n_regions=8), dictionary=None, top_k=5
+    )
     rows = out.collect()
+    assert cache.numCachedEntries() == cached
     assert len(rows) > 0
     for r in rows:
         probs = [t["probability"] for t in r["ukob:topic_set"]]

@@ -694,7 +694,8 @@ def test_ingest_dedup_stream_decomposes_batch_dedup(
     """Micro-batch ingest dedup (delta-vs-corpus + in-batch self)
     emits EXACTLY the one-shot full-corpus MinHash dedup pairs:
     per-pair determinism of signatures/bands/Jaccard makes the
-    decomposition lossless across trigger boundaries."""
+    decomposition lossless across trigger boundaries.  The replay
+    leaves no cached plan behind in the session."""
     from westtopologies_spark.pipelines.ingest_dedup import (
         ingest_dedup_stream,
     )
@@ -719,8 +720,12 @@ def test_ingest_dedup_stream_decomposes_batch_dedup(
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached = cache.numCachedEntries()
     q = ingest_dedup_stream(src, corpus_dir, pairs_dir, threshold=0.3)
     q.awaitTermination(180)
+    assert len({p["batchId"] for p in q.recentProgress}) == 3
+    assert cache.numCachedEntries() == cached
 
     got_rows = spark.read.parquet(pairs_dir).collect()
     got = {

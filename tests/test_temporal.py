@@ -273,29 +273,6 @@ def test_cohort_retention_small(spark):
     assert out[(1, 1)]["retention"] == 1.0
 
 
-def test_chunk_udtf_matches_expression_path(spark):
-    """The Python-UDTF chunker (SURVEY.md §2.11 bolt-analog surface)
-    must produce exactly the expression-path chunks."""
-    from westtopologies_spark.ops.udtfs import chunk_documents_udtf
-    from westtopologies_spark.scale.trainprep import chunk_documents
-
-    docs = spark.createDataFrame(
-        # includes NULL and empty text: the UDTF must propagate NULL the
-        # way substring(NULL) does in the expression path (ADVICE r1)
-        [(1, "abcdefghij" * 7), (2, "short"), (3, "x" * 200), (4, None), (5, "")],
-        ["doc_id", "text"],
-    )
-    expr_out = sorted(
-        map(tuple, chunk_documents(docs, size=50, stride=30).collect()),
-        key=repr,
-    )
-    udtf_out = sorted(
-        map(tuple, chunk_documents_udtf(spark, docs, size=50, stride=30).collect()),
-        key=repr,
-    )
-    assert udtf_out == expr_out and len(expr_out) > 5
-
-
 def test_token_budget_mixture_quota_rule(spark):
     from westtopologies_spark.scale import trainprep as TP
 

@@ -119,6 +119,42 @@ def rowset(cols: list[str], rows: list[tuple]) -> tuple[list[str], list[tuple[st
     return sorted_cols, out
 
 
+def fresh_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A new in-memory DuckDB connection with one view per table
+    present under ``sf_dir``.
+
+    ONE CONNECTION PER ORACLE — not an optimization knob, a
+    correctness requirement for the suite: DuckDB's recursive-CTE
+    replays (w1_exact_windows, the components fixpoints) leak
+    buffer-manager accounting on the connection, after which any
+    later memory-hungry oracle fails with 'Out of Memory Error:
+    Failed to allocate block' regardless of the configured limit
+    (reproduced minimally: w1_exact_windows then dd_soft_weights on
+    one connection fails at a 24 GB limit; dd_soft_weights alone
+    passes at 8 GB).  A fresh in-memory database per query gets a
+    fresh buffer manager; setup cost is milliseconds (views are
+    lazy).
+    """
+    # the heavy recursive replays (dd_soft_weights & co at sf0.1)
+    # have a scheduling-dependent transient peak in hash operators
+    # that CANNOT spill — too tight a cap kills them with 'Failed to
+    # allocate block' (and DuckDB's post-OOM cleanup then SEGFAULTS
+    # the process).  Give DuckDB half the host's memory (the other
+    # half is Spark's), a spill path for the operators that can use
+    # one, and one thread per core (hash-op memory scales with
+    # threads), capped at 48 GB / 16 threads.
+    host_mem_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    c = duckdb.connect()
+    c.execute(f"SET memory_limit='{max(1, min(48, host_mem_gb // 2))}GB'")
+    c.execute("SET temp_directory='/tmp/duckdb_spill'")
+    c.execute(f"SET threads={min(16, os.cpu_count() or 1)}")
+    for t in TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(path):
+            c.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return c
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -127,40 +163,6 @@ def main() -> int:
     from westtopologies_spark.session import get_spark
 
     spark = get_spark("oracle-check")
-
-    host_mem_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
-    duck_mem_gb = max(1, min(48, host_mem_gb // 2))
-    duck_threads = min(16, os.cpu_count() or 1)
-
-    def fresh_con():
-        # ONE CONNECTION PER ORACLE — not an optimization knob, a
-        # correctness requirement for the suite: DuckDB's recursive-
-        # CTE replays (w1_exact_windows, the components fixpoints)
-        # leak buffer-manager accounting on the connection, after
-        # which any later memory-hungry oracle fails with 'Out of
-        # Memory Error: Failed to allocate block' regardless of the
-        # configured limit (reproduced minimally: w1_exact_windows
-        # then dd_soft_weights on one connection fails at a 24 GB
-        # limit; dd_soft_weights alone passes at 8 GB).  A fresh
-        # in-memory database per query gets a fresh buffer manager;
-        # setup cost is milliseconds (views are lazy).
-        c = duckdb.connect()
-        # the heavy recursive replays (dd_soft_weights & co at sf0.1)
-        # have a scheduling-dependent transient peak in hash operators
-        # that CANNOT spill — too tight a cap kills them with 'Failed
-        # to allocate block' (and DuckDB's post-OOM cleanup then
-        # SEGFAULTS the process).  Give DuckDB half the host's memory
-        # (the other half is Spark's), a spill path for the operators
-        # that can use one, and one thread per core (hash-op memory
-        # scales with threads), capped at 48 GB / 16 threads.
-        c.execute(f"SET memory_limit='{duck_mem_gb}GB'")
-        c.execute("SET temp_directory='/tmp/duckdb_spill'")
-        c.execute(f"SET threads={duck_threads}")
-        for t in TABLES:
-            c.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-            )
-        return c
 
     failures = 0
     n_run = 0
@@ -183,13 +185,11 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {spec.name}: spark error: {e}")
             failures += 1
-            spark.catalog.clearCache()
             continue
         if spec.oracle is None:
             print(f"ok   {spec.name}: rows-only ({len(s_rows)} rows, {time.time()-t0:.1f}s)")
-            spark.catalog.clearCache()
             continue
-        con = fresh_con()
+        con = fresh_con(sf_dir)
         try:
             rel = con.sql(spec.oracle)
             d_cols = list(rel.columns)
@@ -198,7 +198,6 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {spec.name}: duckdb error: {e}")
             failures += 1
-            spark.catalog.clearCache()
             con.close()
             continue
 
@@ -225,10 +224,6 @@ def main() -> int:
             failures += 1
         else:
             print(f"ok   {spec.name}: {len(sr)} rows match ({time.time()-t0:.1f}s)")
-        # drop intra-query persists, like bench.py: 190 queries'
-        # accumulated pins otherwise squeeze the shared 16g driver
-        # JVM for the suite's tail
-        spark.catalog.clearCache()
 
     spark.stop()
     print(f"\n{failures} failures")

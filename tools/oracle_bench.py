@@ -15,47 +15,20 @@ import os
 import sys
 import time
 
-import duckdb
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings".split()
-)
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    from tools.check_oracle import fresh_con
     from westtopologies_spark.queries import oracle_sql
-
-    def fresh_con():
-        # fresh connection per oracle, as in check_oracle.py: DuckDB's
-        # recursive-CTE replays leak buffer-manager accounting on the
-        # connection, poisoning later memory-hungry queries; a fresh
-        # in-memory database costs milliseconds and views are lazy,
-        # so per-query timings are unaffected
-        c = duckdb.connect()
-        # same headroom recipe as check_oracle.py (ORACLE_DISCIPLINE:
-        # the recursive-replay peak lives in non-spillable hash ops
-        # and is scheduling-dependent around ~24 GB — 48 GB + bounded
-        # threads is what made dd_soft_weights reliable there)
-        c.execute("SET memory_limit='48GB'")
-        c.execute("SET temp_directory='/tmp/duckdb_spill'")
-        c.execute("SET threads=16")
-        for t in TABLES:
-            path = os.path.join(sf_dir, f"{t}.parquet")
-            if os.path.exists(path):
-                c.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-                )
-        return c
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     t_all = time.time()
     for name, sql in oracle_sql().items():
-        con = fresh_con()
+        con = fresh_con(sf_dir)
         t0 = time.time()
         try:
             con.execute(sql).fetchall()

@@ -50,18 +50,9 @@ def main() -> None:
         if sql is None:
             print("-- no oracle for this query (rows-only check)")
         else:
-            import duckdb
+            from tools.check_oracle import fresh_con
 
-            con = duckdb.connect()
-            for t in (
-                "region nation customer supplier part orders lineitem "
-                "events documents embeddings"
-            ).split():
-                p = os.path.join(args.sf_dir, f"{t}.parquet")
-                if os.path.exists(p):
-                    con.execute(
-                        f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-                    )
+            con = fresh_con(args.sf_dir)
             res = con.execute(sql).fetchall()
             print(f"-- oracle: {len(res)} rows (showing {min(args.n, len(res))})")
             for row in res[: args.n]:

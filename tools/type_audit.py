@@ -20,14 +20,8 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings".split()
-)
 
 # Pure spelling normalization: each entry maps dialect spellings of the
 # SAME physical type to one canon.  int32 and int64 stay DISTINCT; so do
@@ -85,6 +79,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
+    from tools.check_oracle import fresh_con
     from westtopologies_spark.queries import catalog
     from westtopologies_spark.session import get_spark
 
@@ -104,12 +99,7 @@ def main() -> int:
             print(f"ERR  {spec.name}: spark: {e}")
             mismatches += 1
             continue
-        con = duckdb.connect()
-        con.execute("SET threads=8")
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-            )
+        con = fresh_con(sf_dir)
         try:
             rel = con.sql(spec.oracle)
             d_typ = {c: norm(str(t)) for c, t in zip(rel.columns, rel.types)}
@@ -128,7 +118,6 @@ def main() -> int:
         if bad:
             print(f"TYPE {spec.name}: (duck, spark) {bad}")
             mismatches += 1
-        spark.catalog.clearCache()
 
     spark.stop()
     print(f"\n{checked} oracles checked, {mismatches} strict-type mismatches")

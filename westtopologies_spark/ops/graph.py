@@ -324,7 +324,13 @@ def kcore_peel(
     sym = e.select(F.col("u").alias("user_id")).unionByName(
         e.select(F.col("v").alias("user_id"))
     )
-    return sym.groupBy("user_id").agg(F.count(F.lit(1)).alias("degree"))
+    # the per-node result is small: materialize it from the last
+    # round's cache, then release that cache too
+    out = (
+        sym.groupBy("user_id").agg(F.count(F.lit(1)).alias("degree")).localCheckpoint()
+    )
+    e.unpersist()
+    return out
 
 
 LPA_ROUNDS = 4
@@ -352,13 +358,8 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
 
     Returns (user_id, community_id, community_size).
     """
-    # persist: the symmetric list is referenced by every unrolled
-    # round's subtree (plus the seed) — without the pin each round
-    # re-derives the reply join
-    sym = (
-        edges.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
-        .union(edges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
-        .persist()
+    sym = edges.select(F.col("u").alias("node"), F.col("v").alias("nbr")).union(
+        edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
     )
     labels = sym.select("node").distinct().withColumn("label", F.col("node"))
     w = Window.partitionBy("node").orderBy(F.desc("_c"), F.asc("label"))
@@ -520,8 +521,8 @@ def khop_reach(
     anti-joins everything already reached, so a node's hop is its
     first discovery round (= min distance).  All-integer — trivially
     hash-exact.  Per round one keyed join + one anti join; the
-    reached set is pinned per round because the next round both
-    expands and subtracts it.
+    subtrees the rounds share are computed once by runtime exchange
+    reuse.
 
     ``seeds``: one ``node`` column; ``edges``: distinct undirected
     u < v.
@@ -529,7 +530,7 @@ def khop_reach(
     sym = edges.select(
         F.col("u").alias("node"), F.col("v").alias("nb")
     ).unionByName(edges.select(F.col("v").alias("node"), F.col("u").alias("nb")))
-    reach = seeds.select("node", F.lit(0).alias("hop")).persist()
+    reach = seeds.select("node", F.lit(0).alias("hop"))
     frontier = reach
     for h in range(1, hops + 1):
         nxt = (
@@ -537,20 +538,8 @@ def khop_reach(
             .select(F.col("nb").alias("node"))
             .distinct()
         )
-        prev_frontier = frontier
-        frontier = (
-            nxt.join(reach.select("node"), "node", "left_anti")
-            .select("node", F.lit(h).alias("hop"))
-            .persist()
+        frontier = nxt.join(reach.select("node"), "node", "left_anti").select(
+            "node", F.lit(h).alias("hop")
         )
-        prev = reach
-        reach = reach.unionByName(frontier).persist()
-        # this round's reach is materialized by the next loop's (or
-        # the caller's) action lazily; the PREVIOUS round's reach and
-        # frontier pins are dead now — drop them so rounds don't
-        # accumulate storage (same hygiene as kcore_peel; note
-        # prev_frontier == prev at h=1, unpersist is idempotent)
-        prev.unpersist()
-        if prev_frontier is not prev:
-            prev_frontier.unpersist()
+        reach = reach.unionByName(frontier)
     return reach.select(F.col("node").alias("user_id"), F.col("hop").cast("long"))

@@ -82,11 +82,9 @@ def with_root_ids(nodes: DataFrame, max_depth: int = 16) -> DataFrame:
     made explicit. Each step is a hash join on the id — distributed,
     no driver recursion.
 
-    Each doubling step is persisted (the iterative-graph pattern, cf.
-    GraphX/Pregel): the self-join otherwise doubles the PLAN subtree
-    per pass — 2^k copies of the scan — and every downstream consumer
-    would re-expand it. The cached mapping is 2 narrow columns,
-    negligible next to the data it indexes.
+    Each pass joins the previous pass with itself, so the plan holds
+    2^k copies of the scan; the copies are identical subtrees, and
+    runtime exchange reuse computes each pass's two shuffles once.
     """
     cur = nodes.select("tweet_id", F.coalesce("parent_id", "tweet_id").alias("_anc"))
     for i in range(_doubling_steps(max_depth)):
@@ -98,7 +96,7 @@ def with_root_ids(nodes: DataFrame, max_depth: int = 16) -> DataFrame:
             # anc(anc(x)): doubles the resolved distance every pass;
             # roots self-map so converged pointers stay fixed
             F.coalesce(nxt[f"_pa{i}"], cur["_anc"]).alias("_anc"),
-        ).persist()
+        )
     return nodes.join(cur.withColumnRenamed("_anc", "root_id"), "tweet_id")
 
 
@@ -115,9 +113,7 @@ def role_features(nodes: DataFrame, min_limit: int = 1, max_depth: int = 16) -> 
     """
     if "root_id" not in nodes.columns:
         nodes = with_root_ids(nodes, max_depth=max_depth)
-    # ~6 aggregation branches below scan the annotated node table;
-    # persist it once instead of re-expanding the root-walk per branch.
-    nodes = nodes.filter(F.col("author_id").isNotNull()).persist()
+    nodes = nodes.filter(F.col("author_id").isNotNull())
 
     # parent author per node
     par = nodes.select(F.col("tweet_id").alias("_p_id"), F.col("author_id").alias("parent_author"))
@@ -226,11 +222,10 @@ def tercile_levels(
     tercile boundaries trained on the current population (A4,
     Boundaries#train/#getLevel: `<=` -> low/med, else high).
     """
-    # the feature frame (pointer-doubling root walk + fused aggs) feeds
-    # both the boundary aggregation and the join-back; without a pin
-    # Spark computes it twice — at any scale the trained-population
-    # scan is materialized once
-    features = features.persist()
+    # the feature frame feeds both the boundary aggregation and the
+    # join-back: a lazy local checkpoint computes it once (sf0.1 A/B:
+    # a3_role_assignment +14% without it)
+    features = features.localCheckpoint(eager=False)
     aggs = []
     for c in feature_cols:
         vals = F.sort_array(F.collect_list(F.col(c)))

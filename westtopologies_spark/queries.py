@@ -1489,7 +1489,7 @@ def a3_role_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # walk, no eager node checkpoint — see a3_role_features.  The r8
     # feats.localCheckpoint() is gone too: with the walk out of the
     # lineage the feature subtree is small enough that ONE lazy plan
-    # (tercile_levels persists it for the bounds/join-back reuse)
+    # (the bounds and the join-back share it by exchange reuse)
     # beats paying a separate eager analyze+codegen+job cycle —
     # paired cold A/B 7.3 s -> 3.3 s at sf0.1 (OPTIMIZATION_r09.md §1).
     feats = role_features(_event_forest(spark, sf_dir))

@@ -1306,12 +1306,10 @@ def dd_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scale import versioning as V
 
     docs = _t(spark, sf_dir, "documents")
-    # ONE scan + tokenize pass over documents (r9, VERDICT r8 #5):
     # both batches come from the same table, and the char shingle
-    # encoding is pure-map, so the per-row arrays are computed once
-    # and filtered into the two slots (previously each side scanned
-    # and tokenized documents independently).
-    arr = DD.row_shingle_arrays(docs).persist()
+    # encoding is pure-map, so one per-row array frame is filtered
+    # into the two slots
+    arr = DD.row_shingle_arrays(docs)
     h = F.col("doc_id") % V.SNAP_MOD
     return _as_scaled_int(
         DD.incremental_minhash_pairs(

@@ -967,7 +967,9 @@ def mm_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scale import multimodal as MM
 
     b = MM.as_binary_docs(_t(spark, sf_dir, "documents"))
-    sigs = MM.block_hash_signatures(b).persist()
+    # the signatures feed both sides of the band self-join (sf0.1
+    # A/B: +55% without the pin)
+    sigs = MM.block_hash_signatures(b).localCheckpoint(eager=False)
     bandrows = sigs.select(
         "doc_id", F.posexplode("bands").alias("b", "v")
     )

@@ -1642,8 +1642,8 @@ def ann_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k = C.ANN_TOP_K
     emb = _t(spark, sf_dir, "embeddings")
-    cents = ivf_centroids(emb).persist()
-    c = _normed(emb, "embedding", "vec_id", "c_").persist()
+    cents = ivf_centroids(emb)
+    c = _normed(emb, "embedding", "vec_id", "c_")
     cell_of = _nearest_centroid(c, cents)
     c = c.join(cell_of, "c_id")
 
@@ -1673,7 +1673,6 @@ def ann_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pr",
             sim.alias("cosine"),
         )
-        .persist()
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")

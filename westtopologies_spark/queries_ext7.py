@@ -225,25 +225,18 @@ def ag_qq_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         # two-phase global rank: (value, event_id) is a total order,
         # so range partitions never split a key; global rn = local
         # row_number + count of rows in earlier partitions.
-        # persist: BOTH the counts branch and the join probe side
-        # below read ``part`` — repartitionByRange SAMPLES its range
+        # pin: BOTH the counts branch and the join probe side below
+        # read ``part`` — repartitionByRange SAMPLES its range
         # boundaries per computation, so without pinning the two
         # branches could land rows in different pids (correctness
         # would silently ride on spark.sql.exchange.reuse; ADVICE r6
-        # — the same hazard scale/dedup.py:58 distributed_rank
-        # persists against).
-        # CLEANUP CONTRACT (ADVICE r7): the pin is released by the
-        # HARNESS — bench.py and the oracle runner call
-        # spark.catalog.clearCache() after each entry's terminal
-        # action, and the driver's session is per-round. A library
-        # caller embedding this entry in a long-lived session should
-        # clearCache() (or unpersist the returned frame's sources)
-        # after its own terminal action, same as khop_reach's
-        # documented final-frontier pin.
+        # — the same hazard scale/dedup.py distributed_rank pins
+        # against).  A lazy local checkpoint fixes the partitioning
+        # once; its blocks belong to the frame, not the CacheManager.
         part = (
             base.repartitionByRange(F.asc("value"), F.asc("event_id"))
             .withColumn("pid", F.spark_partition_id())
-            .persist()
+            .localCheckpoint(eager=False)
         )
         w_in = Window.partitionBy("pid").orderBy("value", "event_id")
         w_pre = Window.orderBy("pid").rowsBetween(

@@ -57,10 +57,14 @@ def distributed_rank(
         "_pid", F.spark_partition_id()
     )
     local = Window.partitionBy("_pid").orderBy(*cols)
-    # persist BEFORE the offset job: repartitionByRange samples its
+    # pin BEFORE the offset job: repartitionByRange samples its
     # boundaries per action — without pinning, the count job and the
-    # final job would see different partitionings (wrong offsets)
-    ranked = ranged.withColumn("_local", F.row_number().over(local)).persist()
+    # final job would see different partitionings (wrong offsets).  A
+    # lazy local checkpoint fixes the partitioning once; its blocks
+    # belong to the returned frame, never to the CacheManager.
+    ranked = ranged.withColumn("_local", F.row_number().over(local)).localCheckpoint(
+        eager=False
+    )
     counts = ranked.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n")).collect()
     offsets = {}
     acc = 0
@@ -131,9 +135,6 @@ def tokens_with_ids(
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "token")
     if vocab_mode == "char":
         return toks.withColumn("tid", char_hash_tid(F.col("token")))
-    # the token stream feeds both the vocabulary build and the encode
-    # join — pin it so the corpus scan + explode runs once, not twice
-    toks = toks.persist()
     vocab = distributed_rank(toks.select("token").distinct(), "token", rank_col="tid")
     return toks.join(F.broadcast(vocab), "token").select("doc_id", "pos", "tid")
 
@@ -508,9 +509,10 @@ def minhash_lsh_dedup(
     materializes.  Results equal the exploded chain's
     (parity-tested) and the DuckDB oracle's.
 
-    The per-doc array frame is persisted: it feeds the band rows and
-    both sides of the confirm join."""
-    arrs = row_shingle_arrays(docs).persist()
+    The per-doc arrays feed the band rows and both sides of the
+    confirm join: a lazy local checkpoint computes them once (sf0.1
+    A/B: dropping the pin cost the dedup entries 11-37%)."""
+    arrs = row_shingle_arrays(docs).localCheckpoint(eager=False)
     pairs = _pairs_from_band_rows(_band_rows_from_arrays(arrs))
     return jaccard_of_pairs_arrays(pairs, arrs).filter(
         F.col("jaccard") >= threshold
@@ -527,9 +529,10 @@ def _shared_shingle_pairs(docs: DataFrame) -> DataFrame:
     least one shingle, from the inverted shingle index: a pair is
     enumerated once per SHARED shingle (never an all-pairs product)
     and one group per pair counts the intersection.  The shingle
-    index is persisted (used by both join sides and the size
-    lookup)."""
-    shingles = exploded_shingles(docs).persist()
+    index feeds both join sides and the size lookup, so it is
+    computed once through a lazy local checkpoint (sf0.1 A/B: +28-44%
+    without it)."""
+    shingles = exploded_shingles(docs).localCheckpoint(eager=False)
     sa = shingles.select(F.col("doc_id").alias("doc_a"), "shingle")
     sb = shingles.select(F.col("doc_id").alias("doc_b"), "shingle")
     pairs = (
@@ -612,9 +615,9 @@ def prefix_jaccard_pairs(
     second groupBy + join back), one window rank keyed by doc_id (no
     global sort) over the df-joined prefix stream, the candidate
     self-join keyed on shingle over the pruned prefix only, exact
-    confirm from the persisted per-doc arrays.
+    confirm from the same per-doc arrays.
     """
-    arrs = row_shingle_arrays(docs).persist()
+    arrs = row_shingle_arrays(docs)
     shingles = arrs.select(
         "doc_id", F.size("_sh").alias("sz"), F.explode("_sh").alias("shingle")
     )
@@ -877,15 +880,11 @@ def embedding_neardup_pairs_pruned(
             }
         )
 
-    # persist: blocks feed the stats pair-prune AND both grid sides.
-    # Storage memory is LRU-evictable, so repeated runs in a long
-    # session self-bound (same caching pattern as kmeans_assignments'
-    # corpus persist).
     blocks = rows.groupBy("cluster_id").applyInPandas(
         to_block,
         "cluster_id long, ids array<long>, vecs array<array<double>>, "
         "centroid array<double>, radius double",
-    ).persist()
+    )
 
     stats_a = blocks.select(
         F.col("cluster_id").alias("ca"),
@@ -1163,12 +1162,12 @@ def incremental_minhash_pairs(
     delta against the index, never the corpus against itself).
 
     Both inputs are per-doc shingle arrays (doc_id, _sh), the output
-    of :func:`row_shingle_arrays`; the caller owns any persist.  The
-    char encoding is pure-map, so arrays computed per batch, on a
-    shared source table, or read back from a stored corpus index are
-    all the same arrays.  The candidate join probes base bands with
-    the (tiny) insert bands, so the work scales with |delta| x
-    bucket-hit-rate, not |corpus|^2; the confirm intersects the
+    of :func:`row_shingle_arrays`.  The char encoding is pure-map, so
+    arrays computed per batch, on a shared source table, or read back
+    from a stored corpus index are all the same arrays.  The
+    candidate join probes base bands with the (tiny) insert bands,
+    so the work scales with |delta| x bucket-hit-rate, not
+    |corpus|^2; the confirm intersects the
     candidates' arrays (bounded by |candidates|, unlike a join of two
     exploded indexes on the shingle key, where every boilerplate
     shingle fans out across both corpora).  In production the base's
@@ -1227,12 +1226,13 @@ def duplicated_spans(docs: DataFrame, n: int = C.SHINGLE_N) -> DataFrame:
     the duplicate set is one map-side-combined count on the shingle
     key; the probe back is a shingle-keyed hash join; the interval
     merge is the classic gaps-and-islands pair of windows, both
-    partitioned by doc_id (per-doc sort, never global).  The shingle
-    stream is persisted so build + probe tokenize once; at corpus
-    scale both it and the duplicate set would be precomputed bucketed
-    tables (same index as ``incremental_minhash_pairs``).
+    partitioned by doc_id (per-doc sort, never global).  The token
+    arrays are a lazy local checkpoint so build, probe and the token
+    counts tokenize once (sf0.1 A/B: +37% without it); at corpus scale the shingle stream and the
+    duplicate set would be precomputed bucketed tables (same index as
+    ``incremental_minhash_pairs``).
     """
-    ids = doc_tids(docs).persist()
+    ids = doc_tids(docs).localCheckpoint(eager=False)
 
     def shingle_at(tids: Column, i: Column) -> Column:
         acc = F.element_at(tids, i).cast("long")
@@ -1250,7 +1250,6 @@ def duplicated_spans(docs: DataFrame, n: int = C.SHINGLE_N) -> DataFrame:
     psh = (
         ids.select("doc_id", F.posexplode(sh).alias("spos0", "s"))
         .select("doc_id", (F.col("spos0") + 1).alias("spos"), "s")
-        .persist()
     )
     dup = (
         psh.groupBy("s")
@@ -1308,8 +1307,10 @@ def minhash_estimate_audit(docs: DataFrame) -> DataFrame:
     permutation family), so fully oracle-checkable, unlike
     probabilistic-sketch audits."""
     # scan-stage path: signatures fold per row; the exploded index
-    # never shuffles (see minhash_lsh_dedup)
-    arrs = row_shingle_arrays(docs).persist()
+    # never shuffles (see minhash_lsh_dedup); the arrays feed the
+    # signatures, the bands and the confirm, so they are computed once
+    # (sf0.1 A/B: +15% without the pin)
+    arrs = row_shingle_arrays(docs).localCheckpoint(eager=False)
     sigs = row_minhash_signatures(arrs)
     cand = _pairs_from_band_rows(_band_rows_from_arrays(arrs))
     n_h = len(C.MINHASH_COEFFS)

@@ -235,9 +235,7 @@ def ivf_centroids(
     Lloyd assignment is a broadcast-join scan, and the per-cell mean
     is one map-side-combinable aggregation — nothing quadratic.
     """
-    # referenced by the seed pick, the Lloyd assignment and the cell
-    # mean — materialize the normed corpus once
-    v = _normed(emb, vec_col, id_col, "c_").persist()
+    v = _normed(emb, vec_col, id_col, "c_")
     seeds = (
         v.filter(F.col("c_id") % stride == 0)
         .orderBy("c_id")
@@ -284,8 +282,8 @@ def ann_ivf_topk(
     computed once and persisted as a column in a real deployment —
     here it stays in-plan so the query is self-contained.
     """
-    cents = ivf_centroids(corpus, vec_col, id_col, dim).persist()
-    c = _normed(corpus, vec_col, id_col, "c_").persist()
+    cents = ivf_centroids(corpus, vec_col, id_col, dim)
+    c = _normed(corpus, vec_col, id_col, "c_")
     cell_of = _nearest_centroid(c, cents)
     c = c.join(cell_of, "c_id")
 
@@ -425,11 +423,13 @@ def kmeans_assignments(
     iteration trace.  Scale shape per iteration: the centroid table
     (k rows) is broadcast, assignment is one parallel scan, the
     re-center is a map-side-combinable aggregation — the classic
-    mini-batch-free distributed k-means; the corpus scan is persisted
-    once and reused by every round.  No driver-side loop state beyond
-    plan construction (cf. ops.graph.pagerank's unrolled rounds).
+    mini-batch-free distributed k-means; the normed corpus is a lazy
+    local checkpoint, computed by the first round and reused by every
+    later one (sf0.1 A/B without it: emb_kmeans +10%,
+    dd_embedding_neardup +24%).  No driver-side loop state beyond plan construction
+    (cf. ops.graph.pagerank's unrolled rounds).
     """
-    v = _normed(emb, vec_col, id_col, "c_").persist()
+    v = _normed(emb, vec_col, id_col, "c_").localCheckpoint(eager=False)
     cents = (
         v.filter(F.col("c_id") % stride == 0)
         .orderBy("c_id")
@@ -559,7 +559,7 @@ def _pq_fit(
     """Train the PQ codebooks (shared kernel of :func:`pq_codes` and
     :func:`pq_adc_topk`).
 
-    Returns ``(sub, cents, assign)``: the persisted x``m`` subspace
+    Returns ``(sub, cents, assign)``: the checkpointed x``m`` subspace
     explode ``(vec_id, m, sv)``, the final ``m*k``-row codebook
     ``(m, cid, cv)``, and the final assignment
     ``(vec_id, m, cid, bd)`` with the 6dp-rounded squared distance.
@@ -572,7 +572,7 @@ def _pq_fit(
                 F.array(*[F.slice(v, i * sub_dim + 1, sub_dim) for i in range(m)])
             ).alias("m", "sv"),
         )
-    ).persist()
+    ).localCheckpoint(eager=False)
     seeds = (
         emb.select(F.col(id_col).alias("vec_id"))
         .filter(F.col("vec_id") % stride == 0)
@@ -678,10 +678,11 @@ def pq_codes(
     oracle replays the identical trace.
 
     Scale shape: the vector corpus explodes x``m`` into subspace rows
-    ONCE (persisted); every Lloyd round is one broadcast-hash join
-    against the m*k-row codebook plus one map-side-combinable
-    re-centering — the codebook, never the corpus, crosses the
-    network. The final wide pivot is a single hash aggregation on
+    ONCE (a lazy local checkpoint; sf0.1 A/B without it: +9-12% on
+    three of its four entries); every Lloyd round is one
+    broadcast-hash join against the m*k-row codebook plus one
+    map-side-combinable re-centering — the codebook, never the
+    corpus, crosses the network. The final wide pivot is a single hash aggregation on
     vec_id.
     """
     _, _, assign = _pq_fit(emb, m, sub_dim, k, iters, stride, vec_col, id_col)
@@ -796,7 +797,7 @@ def ann_ivfadc_topk(
     sub, cents_pq, assign = _pq_fit(
         emb, m, sub_dim, k, iters, stride, vec_col, id_col
     )
-    icents = ivf_centroids(emb, vec_col, id_col).persist()
+    icents = ivf_centroids(emb, vec_col, id_col)
     c = _normed(emb, vec_col, id_col, "c_")
     cell_of = _nearest_centroid(c, icents)
     qids = (
@@ -929,12 +930,7 @@ def cov_upper(
     cov = (sxy - sx_i*sx_j/n) / (n-1).  ``partials`` lets a caller
     that also needs the moments (PCA's mean vector) share one corpus
     scan."""
-    # persist: the partials feed three branches (products, sums,
-    # count) — without the pin each branch would re-run the corpus
-    # GEMM scan (3 corpus passes at any scale)
-    parts = (
-        cov_gemm_partials(emb, dim).persist() if partials is None else partials
-    )
+    parts = cov_gemm_partials(emb, dim) if partials is None else partials
     sxy = (
         parts.filter(F.col("dim_j") > 0)
         .groupBy("dim_i", "dim_j")
@@ -990,9 +986,10 @@ def pca_power_projection(
     """
     # r9: ONE corpus scan feeds both the covariance and the mean
     # vector — the GEMM partials carry the per-dimension sums and the
-    # count, so the former separate mu pass reads the persisted
-    # partials instead of re-scanning the corpus (guide §2.4).
-    parts = cov_gemm_partials(emb, dim).persist()
+    # count, so the former separate mu pass reads the checkpointed
+    # partials instead of re-scanning the corpus (guide §2.4); sf0.1
+    # A/B: +24% without the pin.
+    parts = cov_gemm_partials(emb, dim).localCheckpoint(eager=False)
     # d^2 rows: single-partition from here on, so each of the tiny
     # iteration shuffles below is one task instead of a 32-way fan
     ut = cov_upper(emb, dim, partials=parts).coalesce(1).localCheckpoint()
@@ -1041,7 +1038,7 @@ def pca_power_projection(
         "d", (F.col("vv") * sgn).alias("vv"), "nrm"
     ).localCheckpoint()
     lam = vf.agg(F.max("nrm").alias("nrm"))
-    # mean vector from the SAME persisted partials as the covariance
+    # mean vector from the SAME checkpointed partials as the covariance
     # (formerly an independent posexplode pass over the corpus)
     mu = (
         parts.filter((F.col("dim_j") == 0) & (F.col("dim_i") > 0))

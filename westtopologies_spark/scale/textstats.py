@@ -266,8 +266,7 @@ def boilerplate_coverage(
     n-gram key, and the probe back is an n-gram-keyed hash join (the
     boilerplate set is tiny next to the corpus — at 100 TB it would be
     a precomputed broadcast/bucketed table, same shape as the
-    incremental-dedup index; here the exploded stream is persisted so
-    the tokenize pass runs once for build and probe).
+    incremental-dedup index).
 
     The shuffled gram key is the 8-byte polynomial FOLD of the words'
     char hashes, not the joined string (~8x less shuffle volume and a
@@ -306,7 +305,11 @@ def boilerplate_coverage(
             lambda i: gram_at(F.col("tids"), i),
         ),
     ).otherwise(F.array().cast("array<long>"))
-    pos = hashed.select("doc_id", F.explode(grams).alias("g")).persist()
+    # build and probe read the same gram stream: tokenize once (sf0.1
+    # A/B: +36% without the pin)
+    pos = hashed.select("doc_id", F.explode(grams).alias("g")).localCheckpoint(
+        eager=False
+    )
     boiler = (
         pos.distinct()
         .groupBy("g")
@@ -344,8 +347,9 @@ def pmi_bigrams(
     adjacent pairs in place.  The corpus is scanned ONCE: only the
     bigram count c_ab aggregates the exploded pairs; the left/right
     unigram counts and N are re-aggregations of that (vocab²-bounded,
-    persisted) count table — `c_a = Σ c_ab group by w1` etc. — so at
-    100 TB the tokenize+explode pass isn't repeated per marginal.
+    locally checkpointed) count table — `c_a = Σ c_ab group by w1`
+    etc. — so at 100 TB the tokenize+explode pass isn't repeated per
+    marginal.
     N (total bigram count) is a 1-row broadcast.  Ranked on the
     ROUNDED score (ties: bigram asc) for cross-engine determinism.
     """
@@ -366,8 +370,12 @@ def pmi_bigrams(
         ),
     ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
     big = base.select(F.explode(pairs).alias("p")).select("p.w1", "p.w2")
+    # the count table feeds the filter, both marginals and N (sf0.1
+    # A/B: +48% without the pin)
     c_ab = (
-        big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c_ab")).persist()
+        big.groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).alias("c_ab"))
+        .localCheckpoint(eager=False)
     )
     c_a = c_ab.groupBy("w1").agg(F.sum("c_ab").alias("c_a"))
     c_b = c_ab.groupBy("w2").agg(F.sum("c_ab").alias("c_b"))
@@ -614,8 +622,12 @@ def bigram_lm_scores(docs: DataFrame) -> DataFrame:
         .groupBy("doc_id", "p.w1", "p.w2")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
+    # the count table feeds the join, both marginals and the total
+    # (sf0.1 A/B: +43% without the pin)
     c_ab = (
-        doc_pairs.groupBy("w1", "w2").agg(F.sum("cnt").alias("c12")).persist()
+        doc_pairs.groupBy("w1", "w2")
+        .agg(F.sum("cnt").alias("c12"))
+        .localCheckpoint(eager=False)
     )
     c_1 = c_ab.groupBy("w1").agg(F.sum("c12").alias("c1"))
     c_2 = c_ab.groupBy("w2").agg(F.sum("c12").alias("c2"))

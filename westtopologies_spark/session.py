@@ -37,10 +37,15 @@ def get_spark(
     shuffle_partitions = shuffle_partitions or cpus
     # In local mode executors live inside the driver JVM; the 1g
     # default heap starves 32 concurrent task threads (broadcast
-    # builds OOM once a few intermediates are cached). Only effective
-    # if set before the JVM launches — i.e. harmless no-op when a
-    # session already exists.
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    # builds OOM once a few intermediates are cached). The default is
+    # half the host's physical memory, capped at 16g, so the driver
+    # never claims what the host does not have. Only effective if set
+    # before the JVM launches — i.e. harmless no-op when a session
+    # already exists.
+    host_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    driver_mem = os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(16, host_gb // 2))}g"
+    )
     # Whole-stage codegen emits fresh classes per query; a long-lived
     # session running the full 140-query catalog overflows the JVM's
     # default 240m JIT code cache mid-suite, after which compilation

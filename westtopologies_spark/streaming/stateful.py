@@ -290,7 +290,11 @@ def data_driven_windows_distributed(
         res["blk"] = res["blk"].astype("int32")
         yield res
 
-    base = part.mapInPandas(local_pass, base_schema).persist()
+    # pinned: the metas collect, the jump table and the returned plan
+    # must all see ONE range partitioning (repartitionByRange samples
+    # its boundaries per action).  A lazy local checkpoint fixes it
+    # once; its blocks belong to the returned frame.
+    base = part.mapInPandas(local_pass, base_schema).localCheckpoint(eager=False)
     rows = base.filter(F.col("kind") == "r")
 
     metas = sorted(
@@ -300,7 +304,6 @@ def data_driven_windows_distributed(
         .collect()
     )
     if not metas:
-        base.unpersist()
         return spark.createDataFrame([], W1_OUT_SCHEMA)
     blk_pos = {b: i for i, (b, _, _) in enumerate(metas)}
 
