@@ -68,6 +68,22 @@ def test_bug_compatible_mode(forest):
     assert [r["role"] for r in roles] == ["<None>"]
 
 
+def test_event_forest_rejects_an_event_id_gap(spark, sf_dir, tmp_path):
+    """The a3 entries root every event at ``eid - eid % 5``, which holds
+    only for event_ids 0..n-1: with event 7 missing, an event whose
+    parent chain passes through 7 would get root 5 where the oracle's
+    walk drops it. The query must raise instead."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from westtopologies_spark.queries import queries
+
+    events = pq.read_table(f"{sf_dir}/events.parquet")
+    pq.write_table(events.filter(pc.not_equal(events["event_id"], 7)), tmp_path / "events.parquet")
+    with pytest.raises(Exception, match="event_id contiguous from 0"):
+        queries()["a3_role_features"](spark, str(tmp_path)).collect()
+
+
 def test_window_roles_hand_computed():
     """The per-window kernel on the fixture forest: A and B post twice,
     C once; usernames are the least non-null screen name."""

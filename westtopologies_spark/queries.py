@@ -21,7 +21,7 @@ import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .ops import relational as R
@@ -1420,9 +1420,37 @@ def _event_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB at sf0.001/0.01/0.1 — 0 differing rows in either direction
     (OPTIMIZATION_r09.md §1).  The generic walk stays in
     ops/roles.with_root_ids for real (unknown-shape) forests.
+
+    The closed form needs that contiguity: see `_event_ids_contiguous`.
     """
     eid = F.col("tweet_id")
     return _event_edges(spark, sf_dir).withColumn("root_id", eid - (eid % 5))
+
+
+def _event_ids_contiguous(spark: SparkSession, sf_dir: str) -> Column:
+    """A filter that keeps every row when event_id is exactly
+    0..count-1 and raises otherwise: with a gap, `_event_forest`'s
+    closed form gives a node whose parent is missing a root instead of
+    dropping it.  A scalar subquery over the one-row min/max/count
+    aggregate; the a3 entries filter their OUTPUT on it, so it runs in
+    the action's plan and adds no eager job even where the features
+    are checkpointed at build."""
+    eid = F.col("event_id")
+    lo, hi, n = F.min(eid), F.max(eid), F.count(F.lit(1))
+    message = F.concat(
+        F.lit("_event_forest needs event_id contiguous from 0, got min "),
+        lo.cast("string"),
+        F.lit(" max "),
+        hi.cast("string"),
+        F.lit(" count "),
+        n.cast("string"),
+    )
+    check = _t(spark, sf_dir, "events").select(
+        F.when((n == 0) | ((lo == 0) & (hi == n - 1)), F.lit(True)).otherwise(
+            F.raise_error(message)
+        )
+    )
+    return check.scalar()
 
 
 @_register(
@@ -1451,7 +1479,7 @@ def a3_role_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compile-bound entry — is skipped entirely; the node frame is a
     # scan+project, cheap to re-analyze per aggregation branch.
     feats = role_features(_event_forest(spark, sf_dir))
-    return feats.select(
+    return feats.where(_event_ids_contiguous(spark, sf_dir)).select(
         "user_id",
         "post_count",
         "replied_posts",
@@ -1494,7 +1522,9 @@ def a3_role_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # paired cold A/B 7.3 s -> 3.3 s at sf0.1 (OPTIMIZATION_r09.md §1).
     feats = role_features(_event_forest(spark, sf_dir))
     roles = assign_roles(tercile_levels(feats))
-    return roles.select("user_id", "post_count", "role")
+    return roles.where(_event_ids_contiguous(spark, sf_dir)).select(
+        "user_id", "post_count", "role"
+    )
 
 
 # attach the programmatic oracle to the spec registered above
